@@ -4,9 +4,16 @@ Tested on local[N]; the config choices are the ones that matter on a
 multi-executor cluster at ~100 TB:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join strategy);
-- shuffle partitions sized for the local test rig but overridable — at
-  cluster scale set ``spark.sql.shuffle.partitions`` to ~2-3x total cores
-  and let AQE coalesce;
+- shuffle partitions split by plan kind. AQE batch plans start every
+  exchange at ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
+  (32 by default) and coalesce at runtime. Streaming plans run without
+  AQE, so each of their shuffles, and each stateful operator's state-store
+  instances (one per partition, committed every micro-batch), takes
+  ``spark.sql.shuffle.partitions`` as is; that defaults to the task-slot
+  count (``defaultParallelism``), one partition per slot. An explicit
+  ``shuffle_partitions=`` or ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` sets both
+  confs to the same value. At cluster scale pass ~2-3x total cores. A
+  restarted stream keeps the partition count recorded in its checkpoint;
 - Arrow enabled for every Pandas-UDF hop (the reassembly operators);
 - broadcast threshold left at default 10 MB — the PSI "dimension" tables
   (PAT/PMT/SDT state, descriptor-tag names) are tiny and always broadcast.
@@ -18,7 +25,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+#: initial fan-out of AQE batch exchanges when no explicit count is given
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(
@@ -29,6 +37,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    explicit = shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -36,8 +45,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(explicit or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 50k rows/batch: ~10 MB of 188 B packets per Arrow hop — measured
@@ -50,7 +59,12 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(explicit or spark.sparkContext.defaultParallelism),
+    )
+    return spark
 
 
 TABLE_NAMES = [

@@ -7,7 +7,11 @@ already measures the analogous quantities per micro-batch — batch
 duration, rows, rows/s — and delivers them through
 ``StreamingQueryProgress``; this module materializes that stream of
 events into rows and the reference-shaped rolling summary, servable
-through the S7 stats route (``latency_stats.json``).
+through the S7 stats route (``latency_stats.json``). Each row also keeps
+the batch's full ``durationMs`` phase map (latestOffset, getBatch,
+queryPlanning, addBatch, walCommit, ...) and its state-operator metrics
+summed over the batch's stateful operators (rows, memory, commit time,
+shuffle partitions), so the route says where time and state go.
 
 Listener callbacks run on Spark's listener bus thread — they must never
 touch DataFrames or block; the collector only appends plain dicts under
@@ -32,7 +36,15 @@ from pyspark.sql.streaming.listener import (
 PROGRESS_SCHEMA = (
     "query_id STRING, run_id STRING, batch_id BIGINT, "
     "input_rows BIGINT, rows_per_sec DOUBLE, "
-    "add_batch_ms BIGINT, trigger_ms BIGINT"
+    "add_batch_ms BIGINT, trigger_ms BIGINT, "
+    "duration_ms MAP<STRING, BIGINT>, state_rows_total BIGINT, "
+    "state_memory_bytes BIGINT, state_commit_ms BIGINT, "
+    "state_shuffle_partitions BIGINT"
+)
+
+#: StateOperatorProgress fields summed per batch, in row order
+_STATE_FIELDS = (
+    "numRowsTotal", "memoryUsedBytes", "commitTimeMs", "numShufflePartitions"
 )
 
 
@@ -51,6 +63,7 @@ class ProgressCollector(StreamingQueryListener):
     def onQueryProgress(self, event: QueryProgressEvent) -> None:
         p = event.progress
         dur = p.durationMs or {}
+        ops = p.stateOperators or []
         row = (
             str(p.id),
             str(p.runId),
@@ -59,6 +72,9 @@ class ProgressCollector(StreamingQueryListener):
             float(p.processedRowsPerSecond or 0.0),
             int(dur.get("addBatch", 0)),
             int(dur.get("triggerExecution", 0)),
+            {str(k): int(v) for k, v in dur.items()},
+        ) + tuple(
+            sum(int(getattr(op, f) or 0) for op in ops) for f in _STATE_FIELDS
         )
         with self._lock:
             self.rows.append(row)
@@ -81,12 +97,31 @@ class ProgressCollector(StreamingQueryListener):
     def latency_stats_json(self) -> str:
         """The reference-shaped rolling profile: batch count, row volume,
         mean/max batch latency, mean throughput — as the ``data`` payload
-        for the S7 ``latency_stats.json`` route."""
+        for the S7 ``latency_stats.json`` route.
+
+        Also ``phase_ms_total`` (each ``durationMs`` phase summed over all
+        batches), ``state_commit_ms_total`` (state-store commit time
+        summed over all batches) and the state gauges ``state_rows_total``,
+        ``state_memory_bytes`` and ``state_shuffle_partitions``: each
+        query's latest batch, summed over queries."""
         rows = self.snapshot()
+        phases: dict[str, int] = {}
+        latest: dict[str, tuple[Any, ...]] = {}
+        for r in rows:
+            for k, v in r[7].items():
+                phases[k] = phases.get(k, 0) + v
+            latest[r[0]] = r
+        state = {
+            "phase_ms_total": phases,
+            "state_rows_total": sum(r[8] for r in latest.values()),
+            "state_memory_bytes": sum(r[9] for r in latest.values()),
+            "state_commit_ms_total": sum(r[10] for r in rows),
+            "state_shuffle_partitions": sum(r[11] for r in latest.values()),
+        }
         if not rows:
             return json.dumps(
                 {"n_batches": 0, "total_rows": 0, "avg_trigger_ms": None,
-                 "max_trigger_ms": None, "avg_rows_per_sec": None}
+                 "max_trigger_ms": None, "avg_rows_per_sec": None, **state}
             )
         triggers = [r[6] for r in rows]
         return json.dumps(
@@ -98,5 +133,6 @@ class ProgressCollector(StreamingQueryListener):
                 "avg_rows_per_sec": round(
                     sum(r[4] for r in rows) / len(rows), 3
                 ),
+                **state,
             }
         )

@@ -218,11 +218,38 @@ def test_deferral_expires_on_newer_correctness_file(monkeypatch):
     assert victim in order[: plans.DRIVER_WINDOW_BUDGET]
 
 
+def _green_rounds_through(last_round: int) -> dict[str, int]:
+    """The _driver_green_rounds() union restricted to the committed
+    CORRECTNESS_r*.json files of rounds <= last_round."""
+    import glob
+    import json
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    green: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        if rnd > last_round:
+            continue
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                if isinstance(row, dict) and row.get("hash_match"):
+                    green[name] = max(green.get(name, 0), rnd)
+    return green
+
+
 def test_r12_window_takes_r11_deferred_and_r6_stale(monkeypatch):
     """The real r12 acceptance (VERDICT r11 #1 done-criterion): with the
-    shipped _DEFER_PAST_GREEN stamps and the actual CORRECTNESS_r*.json
-    union, the projected 50-row window contains all four r11 additions
-    and every row whose latest green round is <= 6."""
+    shipped _DEFER_PAST_GREEN stamps and the CORRECTNESS_r*.json union as
+    it stood when the r12 window was drawn (files up to r11), the
+    projected 50-row window contains all four r11 additions and every row
+    whose latest green round is <= 6. The inputs are pinned to that file
+    set, so later rounds' correctness files do not change the answer."""
+    through_r11 = _green_rounds_through(11)
+    assert through_r11, "the r01-r11 correctness files must be present"
+    monkeypatch.setattr(plans, "_driver_green_rounds", lambda: dict(through_r11))
+    monkeypatch.setattr(plans, "_latest_correctness_round", lambda: 11)
     rounds = plans._driver_green_rounds() or {}
     window = list(plans.ordered_registry())[: plans.DRIVER_WINDOW_BUDGET]
     for name in (

@@ -228,6 +228,54 @@ def test_latency_profile_collector_and_rest(spark, sf_dir):
         spark.streams.removeListener(col)
 
 
+def test_progress_collector_keeps_phases_and_state_metrics(spark, sf_dir):
+    """ProgressCollector keeps each batch's full durationMs phase map and
+    its summed state-operator metrics, and latency_stats.json exposes
+    them: a stateful availableNow aggregation pinned to 2 partitions must
+    report 2 shuffle partitions and one state row per group."""
+    import time
+
+    from streamprocessors_spark.streaming.metrics import ProgressCollector
+    from streamprocessors_spark.streaming.runner import (
+        run_available_now,
+        stream_documents,
+    )
+
+    col = ProgressCollector()
+    spark.streams.addListener(col)
+    try:
+        agg = stream_documents(spark, sf_dir).groupBy("source").count()
+        out = run_available_now(agg, "complete", shuffle_partitions=2)
+        n_groups = out.count()
+        assert n_groups > 0
+        deadline = time.time() + 30
+        while not col.snapshot() and time.time() < deadline:
+            time.sleep(0.2)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(col)
+
+    rows = col.snapshot()
+    assert rows, "no progress events captured"
+    for r in rows:
+        assert {"addBatch", "triggerExecution"} <= set(r[7])
+        assert r[7]["triggerExecution"] == r[6]
+        assert r[11] == 2  # one stateful operator, 2 partitions
+    assert rows[-1][8] == n_groups
+
+    df = col.to_df(spark)
+    assert df.selectExpr("max(state_shuffle_partitions) AS p").first().p == 2
+
+    stats = json.loads(col.latency_stats_json())
+    assert stats["state_shuffle_partitions"] == 2
+    assert stats["state_rows_total"] == n_groups
+    assert stats["state_commit_ms_total"] == sum(r[10] for r in rows)
+    assert stats["phase_ms_total"]["triggerExecution"] == sum(
+        r[6] for r in rows
+    )
+    assert stats["n_batches"] == len(rows)
+
+
 def test_malformed_id_is_404_not_crash():
     """A non-numeric object id (or any handler exception) must produce a
     404 envelope, never a dropped connection — the reference's 'any other

@@ -265,6 +265,100 @@ def test_section_state_survives_query_restart(spark):
     assert r.crc_ok and r.table_id_ext == 9 and r.version == 5
 
 
+def test_cc_state_restart_keeps_checkpoint_partitions(spark):
+    """A stateful stream restarted after the session's shuffle-partition
+    count changed keeps the count recorded in its checkpoint: its state
+    store was written under N partitions and is read back under N, so
+    the CC counters carry over the restart intact. Run 1 reads two files
+    under N partitions; the session then moves to M != N; run 2 reads two
+    more files from the same checkpoint. The summed output must equal the
+    batch pid_packet_stats over all four files, and the CC gap placed on
+    the first packet after the restart is only counted if last_cc
+    survived it."""
+    from streamprocessors_spark.codec.ts import encode_ts_packet
+    from streamprocessors_spark.operators.demux import pid_packet_stats
+    from streamprocessors_spark.sources import packets_from_binary_column
+    from streamprocessors_spark.streaming.stateful import cc_state_stream
+
+    n_parts, m_parts = 3, 5
+    schema = "stream_id STRING, value BINARY, seq BIGINT"
+    src = tempfile.mkdtemp(prefix=f"spgraft_ccrst_{uuid.uuid4().hex[:6]}_")
+    ckpt = tempfile.mkdtemp(prefix=f"spgraft_ccrst_ckpt_{uuid.uuid4().hex[:6]}_")
+    out = tempfile.mkdtemp(prefix=f"spgraft_ccrst_out_{uuid.uuid4().hex[:6]}_")
+    pids = (50, 51, 52)
+    per_file = 18  # 6 packets per pid, interleaved
+    cc = dict.fromkeys(pids, 0)
+
+    def write_file(i: int, skip: tuple[int, ...] = ()) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pkts = []
+        for j in range(per_file):
+            pid = pids[j % len(pids)]
+            if j < len(pids) and pid in skip:
+                cc[pid] = (cc[pid] + 1) % 16  # CC gap on the file's first packet
+            pkts.append(bytes(encode_ts_packet(pid=pid, cc=cc[pid], payload=b"\x00" * 184)))
+            cc[pid] = (cc[pid] + 1) % 16
+        path = os.path.join(src, f"part{i}.parquet")
+        pq.write_table(
+            pa.table({"stream_id": ["s"], "value": pa.array([b"".join(pkts)], pa.binary()),
+                      "seq": pa.array([i * per_file], pa.int64())}),
+            path,
+        )
+        t = 1_000_000 + 10 * i  # the file source orders batches by mtime
+        os.utime(path, (t, t))
+
+    def run_once():
+        raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        q = (
+            cc_state_stream(packets_from_binary_column(raw, index_col="seq"))
+            .writeStream.format("parquet")
+            .option("path", out)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return [
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        ]
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        write_file(0)
+        write_file(1, skip=(51,))
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        assert set(run_once()) == {n_parts}
+        spark.conf.set("spark.sql.shuffle.partitions", str(m_parts))
+        write_file(2, skip=(52,))
+        write_file(3)
+        run2 = run_once()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert run2 and set(run2) == {n_parts}
+
+    got = {
+        r.pid: (r.n, r.e)
+        for r in spark.read.parquet(out)
+        .groupBy("pid")
+        .agg(F.sum("n_packets").alias("n"), F.sum("cc_errors").alias("e"))
+        .collect()
+    }
+    batch_raw = spark.read.schema(schema).parquet(src)
+    want = {
+        r.pid: (r.n_packets, r.cc_errors)
+        for r in pid_packet_stats(packets_from_binary_column(batch_raw, index_col="seq"))
+        .select("pid", "n_packets", "cc_errors")
+        .collect()
+    }
+    assert got == want
+    assert got == {50: (24, 0), 51: (24, 1), 52: (24, 1)}
+
+
 def test_stream_dedup_minhash_cross_batch_state_parity(spark):
     """Incremental LSH dedup: documents ingested across FOUR micro-batches
     (one file per trigger) must emit exactly the batch candidate pair set

@@ -1,13 +1,16 @@
-"""Round-12 optimization measurement harness (guide §1).
+"""Per-query optimization measurement harness (guide §1).
 
 For each named query: warm it, capture .explain('formatted') to
-plans/r13/<name>_<tag>.txt, then time min-of-3 with BOTH the bench action
+plans/r<round>/<name>_<tag>.txt, then time min-of-3 with BOTH the bench action
 (count) and the noop sink (computes every column, §1.4). Jobs are labeled
 (§1.5) and the UI is enabled so stage/shuffle metrics can be pulled from
 the REST API while the session lives.
 
-Usage: python tools/profile_r13.py <tag> <query> [query...]
-       python tools/profile_r13.py <tag> --top N     (N slowest from BENCH_LOCAL)
+Usage: python tools/profile.py <round> <tag> <query> [query...]
+       python tools/profile.py <round> <tag> --top N  (N slowest from BENCH_LOCAL)
+
+<round> is the optimization round number (e.g. 13); it names the output
+dir plans/r<round>/ and the Spark app.
 """
 
 from __future__ import annotations
@@ -17,15 +20,19 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Run as a script, sys.path[0] is this file's dir, where this module
+# would shadow the stdlib ``profile`` that cProfile (imported by pyspark)
+# needs; put the repo root in its place instead.
+sys.path[0] = REPO
+
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    rnd = f"r{int(sys.argv[1])}"
+    tag = sys.argv[2]
+    names = sys.argv[3:]
 
     from streamprocessors_spark import plans
     from streamprocessors_spark.session import get_spark
@@ -42,13 +49,13 @@ def main() -> None:
         ]
 
     spark = get_spark(
-        app_name="profile-r13",
+        app_name=f"profile-{rnd}",
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.showConsoleProgress": "false",
         },
     )
-    outdir = os.path.join(REPO, "plans", "r13")
+    outdir = os.path.join(REPO, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
 
     spark.range(1_000_000).selectExpr("sum(id * 2) as s").collect()

@@ -99,11 +99,12 @@ def main() -> None:
         run(g)
 
     results = {}
+    default_parts = spark.conf.get("spark.sql.shuffle.partitions")
     for parts in (32, 8, 4, 2, 1):
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         results[f"agg_p{parts}"] = _min3(agg)
         results[f"stateful_p{parts}"] = _min3(stateful)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    spark.conf.set("spark.sql.shuffle.partitions", default_parts)
 
     # real queries at two settings
     from streamprocessors_spark import plans
@@ -120,7 +121,7 @@ def main() -> None:
             results[f"{name}_p{parts}"] = _min3(
                 lambda q=q: q.fn(spark, SF_DIR).count()
             )
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    spark.conf.set("spark.sql.shuffle.partitions", default_parts)
     print(results)
     spark.stop()
 
