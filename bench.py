@@ -292,8 +292,8 @@ def main() -> None:
     # file the driver's output-tail capture can't truncate; the printed
     # line stays compact (r1-cohort only, no spaces) and is emitted LAST
     # — after spark.stop(), so no executor/AQE log lines can follow it.
-    # (BENCH_LOCAL.json — BENCH_SELF.json is the r4-vs-r5 A/B artifact,
-    # tools/bench_ab.py, which a bench run must not clobber.)
+    # (BENCH_LOCAL.json — BENCH_SELF.json is the kept record of the r4-vs-r5
+    # A/B, which a bench run must not clobber.)
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
         "w",

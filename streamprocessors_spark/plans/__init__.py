@@ -4,192 +4,19 @@ Every operator the engine claims (SURVEY.md §2 + the LLM-pipeline set) is
 declared here as a named query: a Spark callable ``(spark, sf_dir) ->
 DataFrame`` plus, where ANSI-SQL-expressible, an equivalent DuckDB oracle
 SQL string. The driver hash-compares both at sf=0.01.
+
+The driver contract lists the queries in one derived order (see
+``ordered_registry``): never driver-verified first, then stalest green
+first. Every query is locally oracle-gated by tests/test_oracle_parity.py
+whatever its position.
 """
 
 from streamprocessors_spark.plans.registry import REGISTRY, Query, register  # noqa: F401
 
-# Queries the round-1 driver already verified green (CORRECTNESS_r01.json).
-# The driver's correctness pass covered only the first ~50 registry entries,
-# so registration order is a scheduling decision: entries the driver has NOT
-# yet verified must come first.  This set is only an ordering hint — every
-# query stays registered and locally compared regardless.  It is the static
-# fallback; _driver_green_names() unions every CORRECTNESS_r*.json found at
-# the repo root so the rotation updates itself each round.
-_R01_DRIVER_GREEN = frozenset({
-    "q1_pricing_summary", "window_1min_event_rate", "peak_rate_per_user",
-    "log_trace_rollup", "agg_rollup_region_nation", "q3_shipping_priority",
-    "q5_local_supplier_volume", "left_join_programs_summary",
-    "semi_join_active_customers", "anti_join_idle_customers",
-    "set_intersect_both_status", "set_except_open_only",
-    "topk_orders_by_value", "cc_continuity_check", "latest_version_per_key",
-    "dedup_first_event", "json_settings_extract", "querystring_settings_parse",
-    "sliding_60min_stats", "packet_quarantine_split",
-    "cube_events_by_type_hour", "q6_forecast_revenue", "hypertable_rollup_1h",
-    "approx_distinct_kmv", "order_priority_quartiles", "pivot_events_by_type",
-    "order_value_percentiles", "histogram_event_values", "ts_packet_roundtrip",
-    "ts_demux_pid_stats", "ts_section_reassembly", "ts_programs_summary",
-    "ts_pcr_delta", "base64_pmt_roundtrip", "es_transform_registry",
-    "ts_programs_summary_json", "ts_section_reassembly_packed", "dedup_exact",
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_embedding_cosine", "ann_bruteforce_topk", "ann_lsh_bucketed",
-    "ann_ivf_topk", "text_token_count", "text_quality_score",
-    "text_language_id",
-})
 
-# Highest-priority rows for the round-2 driver window: the two r01 red rows
-# (now fixed) and the judge's pick-3 sentinels for the unchecked families.
-_DRIVER_WINDOW_FIRST = (
-    "doc_fingerprint_winnow",
-    "es_timestamp_stats",
-    "stream_section_reassembly",
-    "q21_waiting_supplier",
-    "corpus_prep_pipeline",
-    "es_subtitle_restamp",
-    "es_scte_subt2dvb",
-)
-
-# Queries whose implementation/oracle changed AFTER their last driver-green
-# row — keep them in the driver window even though a green row exists.
-# Maps name -> round in which the change landed; the pin expires once a
-# CORRECTNESS file from that round or later shows the query green again.
-_FORCE_RECHECK = {
-    # round 3: exact-cents money aggregation sweep (functions/money.py) —
-    # every query whose sum/avg-of-doubles was floor/round-quantized moved
-    # to per-row integer units + BIGINT sums on both engine sides.
-    "q22_idle_rich_customers": 3,  # the round-2 red row (schema changed too)
-    "q10_returned_item_revenue": 3,
-    "q14_promo_revenue_share": 3,
-    "q17_small_qty_revenue": 3,
-    "q7_volume_shipping": 3,
-    "q8_market_share": 3,
-    "q15_top_supplier": 3,
-    "q19_bracket_revenue": 3,
-    "q1_pricing_summary": 3,
-    "window_1min_event_rate": 3,
-    "agg_rollup_region_nation": 3,
-    "q3_shipping_priority": 3,
-    "q5_local_supplier_volume": 3,
-    "sliding_60min_stats": 3,
-    "cube_events_by_type_hour": 3,
-    "q6_forecast_revenue": 3,
-    "hypertable_rollup_1h": 3,
-    "stream_window_event_rate": 3,
-    "resample_1h_gapfill": 3,
-    "embedding_norm_stats": 3,
-    "event_interarrival_stats": 3,  # avg(bigint) -> structural sum/count
-    # round 3: Generate/HOF perf restructures (identical semantics, new
-    # physical shape — explode_outer + codegen'd aggregates)
-    "decontaminate_ngram_overlap": 3,
-    "dedup_simhash": 3,
-    "bigram_corpus_topk": 3,
-    # round 4: scale-shape restructures (identical values, new plans) —
-    # LSH candidates moved from per-bucket collect_list to a capped bands
-    # self-join; every corpus-sized IVF/k-means argmin moved from a
-    # row_number window to a map-side max_by aggregate (the oracle keeps
-    # the window form, so the argmin is now computed two independent ways).
-    "dedup_minhash_lsh": 4,
-    "ivf_kmeans_centroids": 4,
-    "ann_ivf_trained_topk": 4,
-    "ann_ivf_topk": 4,
-    "ann_ivf_recall": 4,
-    # round 4: norms-factored cosine (one dot per pair instead of three;
-    # bit-identical values, oracles unchanged) across the embedding family
-    "dedup_embedding_cosine": 4,
-    "dedup_embedding_lsh": 4,
-    "ann_bruteforce_topk": 4,
-    "ann_lsh_bucketed": 4,
-    "ann_lsh_recall": 4,
-    # round 4: CC loop convergence check moved to a scalar-sum probe
-    # (identical labels, fewer driver round-trips)
-    "dedup_connected_components": 4,
-    # round 5: simhash bands self-join gained the 2..SIMHASH_MAX_BUCKET
-    # count-window gate (oracle mirrors the cap — VERDICT r4 #1)
-    "dedup_simhash_banded": 5,
-    # round 5: connected components moved to pointer-jumping (O(log d)
-    # convergence; identical labels) and the keep-list verdict joins
-    # dropped their forced label broadcasts (VERDICT r4 #2/#3)
-    "dedup_keep_list": 5,
-    "dedup_embedding_keep_list": 5,
-    # round 7 (was 6): the counted-vocab frame is now cached
-    # (vocabulary-sized) so the boundary sample and the rank input share
-    # one corpus aggregation — identical values (VERDICT r6 #3)
-    "text_rarity_score": 7,
-    # round 7 (was 6): suffix windows rank-encoded + bit-packed into
-    # BIGINT limbs before the window exchange; boundary bins now derive
-    # from the cached vocabulary mass table and the cross-bin stitch is
-    # an extrema branch in the same job — identical values (VERDICT
-    # r6 #5)
-    "repeated_phrase_topk": 7,
-    # round 6: capped suffix order for the rank helper (driver-literal
-    # boundaries + offsets — VERDICT r5 #2); suffix round 0 ranks the
-    # vocabulary and joins back
-    "suffix_array_ranks": 6,
-    # round 6: LSH ANN moved to full-vector random-hyperplane buckets
-    # with 26-probe multi-probe (recall gate >= 0.35 — VERDICT r5 #4);
-    # the new bucket family changes both the bucketed top-k and the
-    # recall measurement values
-    "ann_lsh_bucketed": 6,
-    "ann_lsh_recall": 6,
-    # round 8: the streaming image twin's Hamming verify moved from
-    # re-derived batch signatures (optimizer re-inlined the dHash lambda
-    # through both join branches, ~50x planning+eval blow-up) to a
-    # second stateless signature-store sink filled on ingest — identical
-    # values, same shared batch oracle (155 -> 3.7 s warm at sf0.1)
-    "stream_image_phash": 8,
-    # round 8: the image dHash raster offset was missing the 12-byte
-    # SPMM envelope — Spark hashed a shifted window whose planted-pair
-    # output happened to coincide with the text-derived oracle at
-    # sf0.01; tools/sweep_sf.py caught the divergence at sf0.1. The
-    # fixed signatures now equal the oracle's per-image at every scale.
-    "dedup_image_phash": 8,
-    "dedup_image_keep_list": 8,
-}
-
-# Unverified queries DEFERRED past the green tail: an over-window-budget
-# escape hatch for additions landed after a round's ~50-slot driver
-# window is already committed (rule 3 would otherwise evict a stale
-# re-verification). Names here sort AFTER all green rows (they stay
-# registered, locally oracle-gated by tests/test_oracle_parity.py and
-# tools/sweep_sf.py like everything else).
-#
-# Expiry is STRUCTURAL (VERDICT r11 #1): each name maps to the round
-# whose driver window should skip it, and the deferral is active only
-# while no CORRECTNESS_r*.json from that round or later exists. The old
-# rule — expire on the query's first green driver row — could never fire
-# for a deferred query (it can't get a green row while deferred), which
-# twice (r9→r10, r11→r12) left additions permanently unverifiable until
-# the set was emptied by hand. Now the deferral self-expires the moment
-# the deferring round's correctness file lands, regardless of greenness,
-# so a forgotten entry costs one round, not forever.
-#
-# Round 11: every r11 addition was deferred BY DESIGN (VERDICT r10 #2
-# dedicated the whole window to the 67-row stale tail). CORRECTNESS_r11
-# exists, so all four are expired and enter the r12 window as new rows.
-_DEFER_PAST_GREEN: dict[str, int] = {
-    "snapshot_removal_dedup": 11,
-    "ann_ivf_remove": 11,
-    "drift_remediation_plan": 11,
-    "ivf_retrain_plan": 11,
-}
-
-# The driver-window scheduling constants (SURVEY.md §10 rotation split,
-# formalized per VERDICT r10 #8). The driver's one correctness pass has
-# covered exactly 50 rows every round since r1; entries green and
-# code-untouched (no active force-recheck pin) for >= STABLE_AFTER_ROUNDS
-# are 'stable' — their per-round verification is delegated to the local
-# full-registry oracle sweep (the same comparator), and the driver window
-# re-checks them as a stalest-first trickle plus whatever residual slots
-# remain after pins + new entries. STALE_TRICKLE is the guaranteed floor:
-# even a flood of new additions cannot evict the 10 stalest rows from the
-# window (new entries beyond budget - trickle sort AFTER the trickle).
-DRIVER_WINDOW_BUDGET = 50
-STABLE_AFTER_ROUNDS = 3
-STALE_TRICKLE = 10
-
-
-def _driver_green_rounds() -> dict[str, int] | None:
+def _driver_green_rounds() -> dict[str, int]:
     """{query: latest round with a hash-green row} across every
-    CORRECTNESS_r*.json in the repo root; None when none parse."""
+    CORRECTNESS_r*.json in the repo root."""
     import glob
     import json
     import os
@@ -197,8 +24,7 @@ def _driver_green_rounds() -> dict[str, int] | None:
 
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     green: dict[str, int] = {}
-    found = False
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         rnd = int(m.group(1)) if m else 0
         try:
@@ -207,176 +33,19 @@ def _driver_green_rounds() -> dict[str, int] | None:
         except (OSError, ValueError):
             continue
         if isinstance(data, dict):
-            found = True
             for name, row in data.items():
                 if isinstance(row, dict) and row.get("hash_match"):
                     green[name] = max(green.get(name, 0), rnd)
-    return green if found else None
-
-
-def _driver_green_names() -> frozenset[str]:
-    rounds = _driver_green_rounds()
-    return frozenset(rounds) if rounds is not None else _R01_DRIVER_GREEN
-
-
-def _latest_correctness_round() -> int:
-    """Highest round number among CORRECTNESS_r*.json files at the repo
-    root (0 when none exist). Filename-only — a file's presence is the
-    signal that the driver ran that round's window."""
-    import glob
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    best = 0
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m:
-            best = max(best, int(m.group(1)))
-    return best
-
-
-def active_deferrals() -> frozenset[str]:
-    """Names whose _DEFER_PAST_GREEN entry is still in force: deferring
-    round not yet reached by any correctness file AND no green row yet
-    (either event expires the deferral — the file-based expiry is the
-    structural guarantee, the green-row expiry a harmless fast path)."""
-    latest = _latest_correctness_round()
-    green = _driver_green_names()
-    return frozenset(
-        n
-        for n, rnd in _DEFER_PAST_GREEN.items()
-        if latest < rnd and n not in green
-    )
-
-
-def stable_names() -> frozenset[str]:
-    """Entries tagged ``stable``: driver-green, no active force-recheck
-    pin, and untouched for >= STABLE_AFTER_ROUNDS rounds (their last
-    green row is that many rounds behind the latest correctness file).
-    Stable entries are verified every round by the local full-registry
-    sweep; the driver window re-checks them only via the stalest-first
-    trickle + residual slots (SURVEY.md §10 / VERDICT r10 #8)."""
-    green_rounds = _driver_green_rounds() or {}
-    if not green_rounds:
-        return frozenset()
-    current = max(green_rounds.values())
-    return frozenset(
-        n
-        for n, rnd in green_rounds.items()
-        if n in REGISTRY
-        and rnd <= current - STABLE_AFTER_ROUNDS
-        and green_rounds.get(n, 0) >= _FORCE_RECHECK.get(n, 0)
-    )
+    return green
 
 
 def ordered_registry() -> dict[str, Query]:
-    """REGISTRY reordered so driver-unverified queries come first.
-
-    Order: (1) priority rows (fixed red rows + sentinels),
-    (2) active force-recheck pins (impl changed after last green row),
-    (3) everything without a driver-green row yet (registration order) —
-    but only up to DRIVER_WINDOW_BUDGET - pins - STALE_TRICKLE entries:
-    (4) the STALE_TRICKLE stalest green rows are a guaranteed floor a
-    flood of new additions can never evict (the 'stable share cap' —
-    stable entries compete for residual slots, but the trickle is
-    budgeted alongside pins + new, VERDICT r10 #8); then
-    (5) any new entries beyond the cap, then
-    (6) the remaining driver-green queries, STALEST FIRST — ordered by
-    the round of their latest green row ascending, so each round's spare
-    window slots re-verify the rows whose last driver check is oldest.
-    Rotating this way converts 'locally green' into the driver's own
-    signal even though one correctness pass covers only ~50 entries.
-    Exception to (3): active _DEFER_PAST_GREEN entries sort LAST — the
-    over-window-budget escape hatch for late-round additions. A deferral
-    expires structurally once the deferring round's correctness file
-    exists (or on a green row), see active_deferrals().
-    """
-    green = _driver_green_names()
-    green_rounds = _driver_green_rounds() or {}
-    deferred = active_deferrals()
-    out: dict[str, Query] = {}
-    for name in _DRIVER_WINDOW_FIRST:
-        if name in REGISTRY and name not in green:
-            out[name] = REGISTRY[name]
-    for name, since_round in _FORCE_RECHECK.items():
-        if (
-            name in REGISTRY
-            and name not in out
-            and green_rounds.get(name, 0) < since_round
-        ):
-            out[name] = REGISTRY[name]
-    # (3) new entries, capped so the stale trickle always fits the window
-    new_cap = max(0, DRIVER_WINDOW_BUDGET - len(out) - STALE_TRICKLE)
-    overflow_new: list[str] = []
-    for name, q in REGISTRY.items():
-        if name not in out and name not in green and name not in deferred:
-            if new_cap > 0:
-                out[name] = q
-                new_cap -= 1
-            else:
-                overflow_new.append(name)
-    # (4) the guaranteed trickle + (6) the rest of the green tail, both
-    # stalest-first — one sorted pass with the overflow spliced between
-    reg_pos = {name: i for i, name in enumerate(REGISTRY)}
-    green_tail = sorted(
-        (n for n in REGISTRY if n not in out and n in green and n not in deferred),
-        key=lambda n: (green_rounds.get(n, 0), reg_pos[n]),
-    )
-    for name in green_tail[:STALE_TRICKLE]:
-        out[name] = REGISTRY[name]
-    for name in overflow_new:
-        out[name] = REGISTRY[name]
-    for name in green_tail[STALE_TRICKLE:]:
-        out[name] = REGISTRY[name]
-    for name in REGISTRY:
-        if name in deferred and name not in out:
-            out[name] = REGISTRY[name]
-    return out
-
-
-def driver_window_projection(
-    budget: int = DRIVER_WINDOW_BUDGET,
-) -> dict[str, list[str]]:
-    """The projected driver window (the first ``budget`` names of
-    ordered_registry()), partitioned by WHY each row is in it — the
-    explicit form of the rotation split so its properties are testable:
-    'pins' (sentinels + force-recheck), 'new' (never green), 'trickle'
-    (the guaranteed stalest floor), 'residual' (further green rows,
-    stalest-first). max(projected age) for NON-stable rows stays
-    <= STABLE_AFTER_ROUNDS at current growth because pins + new always
-    lead the window."""
-    green = _driver_green_names()
-    names = list(ordered_registry())[:budget]
-    green_rounds = _driver_green_rounds() or {}
-    out: dict[str, list[str]] = {
-        "pins": [],
-        "new": [],
-        "trickle": [],
-        "residual": [],
-    }
-    trickle_left = STALE_TRICKLE
-    for n in names:
-        if n not in green:
-            if n in _DRIVER_WINDOW_FIRST or green_rounds.get(
-                n, 0
-            ) < _FORCE_RECHECK.get(n, 0):
-                out["pins"].append(n)
-            else:
-                out["new"].append(n)
-        elif green_rounds.get(n, 0) < _FORCE_RECHECK.get(n, 0):
-            out["pins"].append(n)
-        elif trickle_left > 0:
-            # the scheduler's guaranteed floor is the STALE_TRICKLE
-            # STALEST green rows regardless of the stable tag (they are
-            # usually stable, but right after a full-tail re-green the
-            # stalest rows can be younger than STABLE_AFTER_ROUNDS) —
-            # classify exactly what ordered_registry reserves
-            out["trickle"].append(n)
-            trickle_left -= 1
-        else:
-            out["residual"].append(n)
-    return out
+    """REGISTRY ordered by the round of each query's latest driver-green
+    row, ascending: never-green queries count as round 0 and lead, then
+    the stalest green rows. The sort is stable, so ties keep registration
+    order."""
+    rounds = _driver_green_rounds()
+    return {n: REGISTRY[n] for n in sorted(REGISTRY, key=lambda n: rounds.get(n, 0))}
 
 
 def load_all() -> None:

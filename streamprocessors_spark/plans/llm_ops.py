@@ -4721,7 +4721,11 @@ def _rank_two_level(
     contiguous monotone split yields the same final ranks (offset +
     local rank is split-invariant), so freezing the sampled boundaries
     loses nothing while the big frame never leaves the JVM pipeline.
-    Keys must be non-null on this path."""
+    Keys must be non-null on this path.
+
+    Scratch columns use private names, so a caller column called
+    ``part``, ``lr`` or ``off`` passes through untouched."""
+    part, lr, off = "__r2l_part", "__r2l_lr", "__r2l_off"
     spark = df.sparkSession
     nparts = spark.sparkContext.defaultParallelism
     cols = [F.col(c) for c in key_cols]
@@ -4737,8 +4741,8 @@ def _rank_two_level(
         ]
         rows = (
             df.repartitionByRange(nparts, *cols)
-            .select(F.spark_partition_id().alias("part"), "*")
-            .groupBy("part")
+            .select(F.spark_partition_id().alias(part), "*")
+            .groupBy(part)
             .agg(
                 F.min(F.struct(*cols)).alias("mn"),
                 (
@@ -4748,7 +4752,7 @@ def _rank_two_level(
             )
             .collect()  # bounded: one row per suffix-rank partition (fixed count)
         )
-        rows.sort(key=lambda rw: rw["part"])
+        rows.sort(key=lambda rw: rw[part])
         if stats_out is not None:
             # range partitions are disjoint in key space, so the sum of
             # per-partition distinct-key counts IS the global key count
@@ -4771,42 +4775,42 @@ def _rank_two_level(
             F.create_map(*pairs) if pairs
             else F.create_map(F.lit(0), F.lit(0))
         )
-        w_local = Window.partitionBy("part").orderBy(*key_cols)
+        w_local = Window.partitionBy(part).orderBy(*key_cols)
         rank_fn = F.dense_rank() if dense else F.row_number()
         return (
-            df.withColumn("part", part_expr.cast("int"))
-            .withColumn("lr", rank_fn.over(w_local))
+            df.withColumn(part, part_expr.cast("int"))
+            .withColumn(lr, rank_fn.over(w_local))
             .withColumn(
                 "r",
-                (off_map[F.col("part")] + F.col("lr")).cast("bigint"),
+                (off_map[F.col(part)] + F.col(lr)).cast("bigint"),
             )
-            .drop("part", "lr")
+            .drop(part, lr)
         )
-    ranged = df.withColumn("part", part_of)
-    w_local = Window.partitionBy("part").orderBy(*key_cols)
+    ranged = df.withColumn(part, part_of)
+    w_local = Window.partitionBy(part).orderBy(*key_cols)
     rank_fn = F.dense_rank() if dense else F.row_number()
-    local = ranged.withColumn("lr", rank_fn.over(w_local))
-    counts = ranged.groupBy("part").agg(
+    local = ranged.withColumn(lr, rank_fn.over(w_local))
+    counts = ranged.groupBy(part).agg(
         (F.countDistinct(*cols) if dense else F.count(F.lit(1))).alias("nk")
     )
     offsets = counts.withColumn(
-        "off",
+        off,
         F.coalesce(
             # bounded: counts is one row per range-partition id — shuffle-
             # partition-count-sized, independent of corpus rows
             F.sum("nk").over(
-                Window.orderBy("part").rowsBetween(
+                Window.orderBy(part).rowsBetween(
                     Window.unboundedPreceding, -1
                 )
             ),
             F.lit(0),
         ),
-    ).select("part", "off")
+    ).select(part, off)
     # bounded: offsets has exactly #partitions rows
     return (
-        local.join(F.broadcast(offsets), "part")
-        .withColumn("r", (F.col("off") + F.col("lr")).cast("bigint"))
-        .drop("part", "lr", "off")
+        local.join(F.broadcast(offsets), part)
+        .withColumn("r", (F.col(off) + F.col(lr)).cast("bigint"))
+        .drop(part, lr, off)
     )
 
 

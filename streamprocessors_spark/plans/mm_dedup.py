@@ -59,7 +59,7 @@ IMG_W, IMG_H = MM.PPM_W, MM.PPM_H  # 8 x 6 fixture raster
 # 12-byte-shifted window (envelope tail + PPM header + first 121 text
 # bytes). The planted-variant pair set and hamming counts coincided
 # with the text-derived oracle at sf0.01 — the gate only diverged at
-# sf0.1 (616 vs 611 pairs, caught by tools/sweep_sf.py) — but the
+# sf0.1 (616 vs 611 pairs, caught by a full tools/compare.py run) — but the
 # signatures themselves were never the documented dHash of the pixels.
 IMG_HDR_LEN = len(MM.MAGIC) + 8 + len(MM.PPM_HEADER)
 IMG_BITS = 63  # 42 horizontal + 21 vertical comparisons (sign-safe)

@@ -23,8 +23,6 @@ as an explicit ``shuffle_partitions`` floor, i.e. also one partition per
 slot by default; that is intended, since a partition beyond the slot
 count only queues behind the others (measured at sf0.1 on 4 cores: the
 three such queries run 1.9-2.3x faster warm at 4 partitions than at 32).
-``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides everything (the
-production knob).
 StreamExecution clones the session AT START, so setting the conf around
 ``.start()`` latches it per query without affecting any other plan; a
 restart from an existing checkpoint keeps the count recorded there.
@@ -88,13 +86,10 @@ def _suggest_partitions(spark: SparkSession, path: str) -> None:
 def _resolve_stream_partitions(
     spark: SparkSession, shuffle_partitions: int | None
 ) -> int | None:
-    """Explicit caller value > env override > pending input-size
-    suggestion > None (keep the session conf)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
+    """Explicit caller value > pending input-size suggestion > None
+    (keep the session conf)."""
     pending = max(_PENDING_PARTS) if _PENDING_PARTS else None
     _PENDING_PARTS.clear()
-    if env:
-        return int(env)
     if shuffle_partitions is not None:
         return int(shuffle_partitions)
     return pending

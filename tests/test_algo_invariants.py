@@ -658,6 +658,33 @@ def test_suffix_ranks_capped_prefix(spark, sf_dir):
     assert got == expected
 
 
+@pytest.mark.parametrize("pure_part_of", [False, True])
+def test_rank_two_level_keeps_caller_columns(spark, pure_part_of):
+    """_rank_two_level's scratch columns must not collide with the
+    caller's: a frame carrying its own ``part``, ``lr`` and ``off`` keeps
+    them unchanged on both the sampling path (part_of=None) and the pure
+    part_of path, and ``r`` equals a single-window dense_rank /
+    row_number over the keys."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from streamprocessors_spark.plans.llm_ops import _rank_two_level
+
+    rows = [(i, (i * 7) % 11, f"p{i}", i * 10, -i) for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, k long, part string, lr long, off long")
+    part_of = F.expr("k div 3") if pure_part_of else None
+    for keys, dense, rank_fn in (
+        (["k"], True, F.dense_rank()),
+        (["k", "id"], False, F.row_number()),
+    ):
+        got = _rank_two_level(df, keys, dense=dense, part_of=part_of)
+        assert got.columns == df.columns + ["r"]
+        want = df.withColumn("r", rank_fn.over(Window.orderBy(*keys)))
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        )
+
+
 def test_line_dedup_hand_fixture(spark):
     """C4-style line dedup hand fixtures: a repeated 10-word line keeps
     only its first occurrence, a doc that is entirely seen lines comes

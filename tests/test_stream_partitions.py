@@ -28,14 +28,6 @@ def test_resolution_precedence(spark):
     R._PENDING_PARTS.append(3)
     assert R._resolve_stream_partitions(spark, 7) == 7
 
-    # env override beats both
-    R._PENDING_PARTS.append(3)
-    os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "11"
-    try:
-        assert R._resolve_stream_partitions(spark, 7) == 11
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
-
     # nothing pending, nothing passed -> keep session conf (None)
     assert R._resolve_stream_partitions(spark, None) is None
 

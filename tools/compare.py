@@ -4,6 +4,16 @@ For each declared query the driver runs the Spark plan and the DuckDB oracle
 over the same parquet fixtures and compares row count, schema (column names,
 sorted) and an order-insensitive value hash. This module reproduces that
 check locally so every operator can be validated before the round ends.
+
+Run as a script it compares queries under a vanilla local[8] session (the
+shape the ``__spark_entry__`` contract is verified in) and exits 1 on any
+failure:
+
+    python tools/compare.py <sf_dir> [query ...]   (all queries if none named)
+
+The correctness gate runs at sf0.01; a full run at sf0.1 (~13 min) also flushes
+out scale-dependent divergence such as DuckDB rounding an integer ``/``
+half-up where Spark's floor() truncates.
 """
 
 from __future__ import annotations
@@ -11,6 +21,8 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import sys
+import time
 from dataclasses import dataclass
 
 import duckdb
@@ -128,3 +140,54 @@ def compare_query(name, spark_df, con, oracle: str) -> CompareResult:
         hash_match=hash_match,
         detail=detail,
     )
+
+
+def main(argv: list[str]) -> int:
+    sf_dir, names = argv[0], argv[1:]
+
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName("compare")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.shuffle.partitions", "8")
+        .getOrCreate()
+    )
+    import __spark_entry__ as e
+
+    qs, osql = e.queries(), e.oracle_sql()
+    con = duckdb_conn(sf_dir)
+    bad = 0
+    t_all = time.time()
+    for name in names or sorted(qs):
+        t0 = time.time()
+        try:
+            df = qs[name](spark, sf_dir)
+            if name not in osql:
+                print("ROWS-ONLY", name, df.count())
+                continue
+            r = compare_query(name, df, con, osql[name])
+            if not r.ok:
+                bad += 1
+            print(
+                "OK " if r.ok else "FAIL",
+                name,
+                r.spark_rows,
+                r.oracle_rows,
+                f"{time.time() - t0:.1f}s",
+                r.detail[:160],
+            )
+        except Exception as ex:  # noqa: BLE001
+            bad += 1
+            print("ERR", name, str(ex)[:240])
+    print(f"FAILURES: {bad} elapsed {round(time.time() - t_all)}s")
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    # Run as a script, sys.path[0] is tools/, whose profile.py would
+    # shadow the stdlib module that cProfile (imported by pyspark) needs;
+    # put the repo root in its place.
+    sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    raise SystemExit(main(sys.argv[1:]))
