@@ -2,9 +2,17 @@
 
 Spark-first restatement of the reference's data plane (SURVEY §3.1):
 the per-PID FIFO/thread/process fan-out becomes ONE shuffle keyed on
-(stream_id, pid); reassembly is a grouped Pandas UDF over position-sorted
-packets; the PSI "registers" become latest-version DataFrames; the REST
-joins (J3-J10) are broadcast hash joins.
+(stream_id, pid); reassembly is a partition-streaming Pandas UDF over
+position-sorted packets; the PSI "registers" become latest-version
+DataFrames; the REST joins (J3-J10) are broadcast hash joins.
+
+Each section is decoded once, inside reassembly, like the reference's
+psi_dec_section (psi_dec.c:110-236): ``section_row`` fills the header
+columns and the typed payload columns ``pas``/``pms``/``sds`` (one per
+table kind, null for the others — SURVEY §1.1's union-as-nullable-structs).
+PAT/PMT/SDT rows are then a native ``inline`` over the latest sections,
+with no Python after reassembly. The streaming twin
+(``streaming/stateful.py``) builds its rows with the same ``section_row``.
 
 Scale notes:
 - PSI PIDs are a tiny, pre-filterable fraction of a capture — the filter
@@ -22,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     BooleanType,
     IntegerType,
@@ -32,29 +41,113 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-SECTION_SCHEMA = StructType(
-    [
-        StructField("stream_id", StringType()),
-        StructField("pid", IntegerType()),
-        StructField("section_index", LongType()),
-        StructField("first_pkt_index", LongType()),
-        StructField("table_id", IntegerType()),
-        StructField("section_length", IntegerType()),
-        StructField("table_id_ext", IntegerType()),
-        StructField("version", IntegerType()),
-        StructField("current_next", IntegerType()),
-        StructField("section_number", IntegerType()),
-        StructField("last_section_number", IntegerType()),
-        StructField("crc_ok", BooleanType()),
-        StructField("section_bytes", BinaryType()),
-    ]
+from streamprocessors_spark.codec.psi import (
+    DESC_TAG_SERVICE,
+    PSI_TABLE_ID_PAT,
+    PSI_TABLE_ID_PMT,
+    PSI_TABLE_ID_SDT,
+    SectionReassembler,
+    parse_section,
 )
+
+
+def _struct(*fields: tuple[str, object]) -> StructType:
+    return StructType([StructField(name, t) for name, t in fields])
+
+
+# typed PSI payloads (R3-R5), as parse_section decodes them
+_PROGRAM = _struct(("program_number", IntegerType()), ("reference_pid", IntegerType()))
+_ES = _struct(
+    ("stream_type", IntegerType()),
+    ("stream_type_name", StringType()),
+    ("elementary_pid", IntegerType()),
+)
+_SERVICE = _struct(
+    ("service_id", IntegerType()),
+    ("running_status", IntegerType()),
+    ("free_ca_mode", IntegerType()),
+    ("service_type", IntegerType()),
+    ("provider_name", StringType()),
+    ("service_name", StringType()),
+)
+
+SECTION_SCHEMA = _struct(
+    ("stream_id", StringType()),
+    ("pid", IntegerType()),
+    ("section_index", LongType()),
+    ("first_pkt_index", LongType()),
+    ("table_id", IntegerType()),
+    ("section_length", IntegerType()),
+    ("table_id_ext", IntegerType()),
+    ("version", IntegerType()),
+    ("current_next", IntegerType()),
+    ("section_number", IntegerType()),
+    ("last_section_number", IntegerType()),
+    ("crc_ok", BooleanType()),
+    ("section_bytes", BinaryType()),
+    # only the payload column matching table_id is non-null
+    ("pas", ArrayType(_PROGRAM)),
+    ("pms", _struct(("pcr_pid", IntegerType()), ("streams", ArrayType(_ES)))),
+    ("sds", ArrayType(_SERVICE)),
+)
+
+
+def _service(s: dict) -> tuple:
+    """J8: project a service onto its first service descriptor (0x48)."""
+    svc_desc = next(
+        (d for d in s["descriptors"] if d["tag"] == DESC_TAG_SERVICE), None
+    )
+    return (
+        s["service_id"],
+        s["running_status"],
+        s["free_ca_mode"],
+        svc_desc["service_type"] if svc_desc else None,
+        svc_desc["provider_name"] if svc_desc else None,
+        svc_desc["service_name"] if svc_desc else "",
+    )
+
+
+def section_row(sec: bytes) -> tuple | None:
+    """R2-R5: the one decode of a reassembled section.
+
+    Returns the SECTION_SCHEMA values from ``table_id`` on — header,
+    ``crc_ok``, the bytes, then ``pas``/``pms``/``sds`` — or None when the
+    section is too short to carry a header. Shared by the batch and the
+    streaming reassembler, so both emit the same row."""
+    h = parse_section(sec)
+    if h["table_id"] is None:
+        return None
+    pas, pms, sds = h["pas"], h["pms"], h["sds"]
+    if pas is not None:
+        pas = [(p["program_number"], p["reference_pid"]) for p in pas]
+    if pms is not None:
+        es = [
+            (s["stream_type"], s["stream_type_name"], s["elementary_pid"])
+            for s in pms["streams"]
+        ]
+        pms = (pms["pcr_pid"], es)
+    if sds is not None:
+        sds = [_service(s) for s in sds["services"]]
+    return (
+        h["table_id"],
+        h["section_length"],
+        h["table_id_ext"],
+        h["version"],
+        h["current_next"],
+        h["section_number"],
+        h["last_section_number"],
+        bool(h["crc_ok"]),
+        sec,
+        pas,
+        pms,
+        sds,
+    )
 
 
 def reassemble_sections(
     packets: DataFrame, psi_pids: list[int] | None = None
 ) -> DataFrame:
-    """R1+R2: per-(stream, PID) section reassembly + header parse.
+    """R1-R5: per-(stream, PID) section reassembly + the one decode.
 
     ``psi_pids=None`` reassembles every PID that carries PUSI payloads;
     passing an explicit list prunes the shuffle to those PIDs (the usual
@@ -71,8 +164,6 @@ def reassemble_sections(
     repartition), and batches within a partition arrive in sorted order, so
     carrying the current key's reassembler across batch boundaries is safe.
     """
-    from streamprocessors_spark.codec.psi import SectionReassembler, parse_section
-
     src = packets.where(F.col("sync_ok") & (F.col("payload_len") > 0))
     if psi_pids is not None:
         src = src.where(F.col("pid").isin([int(p) for p in psi_pids]))
@@ -103,28 +194,12 @@ def reassemble_sections(
                     r = SectionReassembler()
                     idx = 0
                 for sec in r.push(bytes(raw)):
-                    h = parse_section(sec)
-                    if h.get("table_id") is None:
+                    row = section_row(sec)
+                    if row is None:
                         continue
-                    rows.append(
-                        (
-                            stream_id,
-                            int(pid),
-                            idx,
-                            int(pkt_index),
-                            h["table_id"],
-                            h["section_length"],
-                            h["table_id_ext"],
-                            h["version"],
-                            h["current_next"],
-                            h["section_number"],
-                            h["last_section_number"],
-                            bool(h["crc_ok"]),
-                            sec,
-                        )
-                    )
+                    rows.append((stream_id, int(pid), idx, int(pkt_index)) + row)
                     idx += 1
-            yield pd.DataFrame(rows, columns=[f.name for f in SECTION_SCHEMA])
+            yield pd.DataFrame(rows, columns=SECTION_SCHEMA.fieldNames())
 
     return src.mapInPandas(gen, schema=SECTION_SCHEMA)
 
@@ -145,134 +220,44 @@ def latest_sections(sections: DataFrame) -> DataFrame:
     )
 
 
-def _explode_payload(sections: DataFrame, table_id: int, schema, parse_fn):
-    """Helper: filter to one table_id, parse payloads vectorized, explode."""
-    src = latest_sections(sections).where(F.col("table_id") == F.lit(table_id))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                out.extend(parse_fn(row))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
-
-    return src.mapInPandas(gen, schema=schema)
-
-
-PAT_SCHEMA = StructType(
-    [
-        StructField("stream_id", StringType()),
-        StructField("ts_id", IntegerType()),
-        StructField("pat_version", IntegerType()),
-        StructField("program_number", IntegerType()),
-        StructField("reference_pid", IntegerType()),
-    ]
-)
-
-
 def pat_programs(sections: DataFrame) -> DataFrame:
     """R3: PAT -> pat_programs rows (psi_dec.c:501-543)."""
-    from streamprocessors_spark.codec.psi import PSI_TABLE_ID_PAT, parse_section
-
-    def rows(row) -> list[tuple]:
-        h = parse_section(bytes(row["section_bytes"]))
-        return [
-            (
-                row["stream_id"],
-                h["table_id_ext"],
-                h["version"],
-                p["program_number"],
-                p["reference_pid"],
-            )
-            for p in (h["pas"] or [])
-        ]
-
-    return _explode_payload(sections, PSI_TABLE_ID_PAT, PAT_SCHEMA, rows)
-
-
-PMT_SCHEMA = StructType(
-    [
-        StructField("stream_id", StringType()),
-        StructField("program_number", IntegerType()),
-        StructField("pmt_pid", IntegerType()),
-        StructField("pmt_version", IntegerType()),
-        StructField("pcr_pid", IntegerType()),
-        StructField("stream_type", IntegerType()),
-        StructField("stream_type_name", StringType()),
-        StructField("elementary_pid", IntegerType()),
-    ]
-)
+    return (
+        latest_sections(sections)
+        .where(F.col("table_id") == PSI_TABLE_ID_PAT)
+        .select(
+            "stream_id",
+            F.col("table_id_ext").alias("ts_id"),
+            F.col("version").alias("pat_version"),
+            F.inline("pas"),
+        )
+    )
 
 
 def pmt_streams(sections: DataFrame) -> DataFrame:
     """R4: PMT -> pmt_streams rows, one per ES (psi_dec.c:545-658)."""
-    from streamprocessors_spark.codec.psi import PSI_TABLE_ID_PMT, parse_section
-
-    def rows(row) -> list[tuple]:
-        h = parse_section(bytes(row["section_bytes"]))
-        pms = h["pms"] or {"streams": [], "pcr_pid": None}
-        return [
-            (
-                row["stream_id"],
-                h["table_id_ext"],
-                int(row["pid"]),
-                h["version"],
-                pms["pcr_pid"],
-                s["stream_type"],
-                s["stream_type_name"],
-                s["elementary_pid"],
-            )
-            for s in pms["streams"]
-        ]
-
-    return _explode_payload(sections, PSI_TABLE_ID_PMT, PMT_SCHEMA, rows)
-
-
-SDT_SCHEMA = StructType(
-    [
-        StructField("stream_id", StringType()),
-        StructField("ts_id", IntegerType()),
-        StructField("service_id", IntegerType()),
-        StructField("running_status", IntegerType()),
-        StructField("free_ca_mode", IntegerType()),
-        StructField("service_type", IntegerType()),
-        StructField("provider_name", StringType()),
-        StructField("service_name", StringType()),
-    ]
-)
+    return (
+        latest_sections(sections)
+        .where(F.col("table_id") == PSI_TABLE_ID_PMT)
+        .select(
+            "stream_id",
+            F.col("table_id_ext").alias("program_number"),
+            F.col("pid").alias("pmt_pid"),
+            F.col("version").alias("pmt_version"),
+            "pms.pcr_pid",
+            F.inline("pms.streams"),
+        )
+    )
 
 
 def sdt_services(sections: DataFrame) -> DataFrame:
-    """R5+J8: SDT -> sdt_services rows with service-descriptor projection."""
-    from streamprocessors_spark.codec.psi import (
-        DESC_TAG_SERVICE,
-        PSI_TABLE_ID_SDT,
-        parse_section,
+    """R5+J8: SDT -> sdt_services rows with service-descriptor projection
+    (``section_row`` made the projection)."""
+    return (
+        latest_sections(sections)
+        .where(F.col("table_id") == PSI_TABLE_ID_SDT)
+        .select("stream_id", F.col("table_id_ext").alias("ts_id"), F.inline("sds"))
     )
-
-    def rows(row) -> list[tuple]:
-        h = parse_section(bytes(row["section_bytes"]))
-        sds = h["sds"] or {"services": []}
-        out = []
-        for s in sds["services"]:
-            svc_desc = next(
-                (d for d in s["descriptors"] if d["tag"] == DESC_TAG_SERVICE), None
-            )
-            out.append(
-                (
-                    row["stream_id"],
-                    h["table_id_ext"],
-                    s["service_id"],
-                    s["running_status"],
-                    s["free_ca_mode"],
-                    svc_desc["service_type"] if svc_desc else None,
-                    svc_desc["provider_name"] if svc_desc else None,
-                    svc_desc["service_name"] if svc_desc else "",
-                )
-            )
-        return out
-
-    return _explode_payload(sections, PSI_TABLE_ID_SDT, SDT_SCHEMA, rows)
 
 
 def programs_summary(

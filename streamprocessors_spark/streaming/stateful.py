@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from streamprocessors_spark.operators.demux import SECTION_SCHEMA, section_row
+
 CC_OUTPUT_SCHEMA = StructType(
     [
         StructField("stream_id", StringType()),
@@ -95,20 +97,10 @@ def cc_state_stream(packets: DataFrame) -> DataFrame:
     )
 
 
+# The batch row minus its two batch-position columns: a stream has no
+# global packet order to number sections by.
 SECTION_STREAM_SCHEMA = StructType(
-    [
-        StructField("stream_id", StringType()),
-        StructField("pid", IntegerType()),
-        StructField("table_id", IntegerType()),
-        StructField("section_length", IntegerType()),
-        StructField("table_id_ext", IntegerType()),
-        StructField("version", IntegerType()),
-        StructField("current_next", IntegerType()),
-        StructField("section_number", IntegerType()),
-        StructField("last_section_number", IntegerType()),
-        StructField("crc_ok", BooleanType()),
-        StructField("section_bytes", BinaryType()),
-    ]
+    [f for f in SECTION_SCHEMA if f.name not in ("section_index", "first_pkt_index")]
 )
 
 # partial-section carryover: reassembler buffer + sync flag (R1 state)
@@ -123,7 +115,11 @@ SECTION_STATE_SCHEMA = StructType(
 def section_reassembly_stream(
     packets: DataFrame, idle_timeout_ms: int | None = None
 ) -> DataFrame:
-    """R1+R2 as keyed streaming state: PSI section reassembly.
+    """R1-R5 as keyed streaming state: PSI section reassembly + decode.
+
+    Rows come from the batch path's ``section_row``, so they carry the
+    same header and typed payload columns (``pas``/``pms``/``sds``) as
+    ``reassemble_sections``, without its two position columns.
 
     The partial-section buffer crosses micro-batch boundaries through the
     state store, so a section whose packets arrive in different batches
@@ -142,7 +138,7 @@ def section_reassembly_stream(
     never terminates. Batch-parity runs (the oracle gate) use the
     default ``None``.
     """
-    from streamprocessors_spark.codec.psi import SectionReassembler, parse_section
+    from streamprocessors_spark.codec.psi import SectionReassembler
 
     def f(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -150,9 +146,7 @@ def section_reassembly_stream(
         if state.hasTimedOut:
             # idle key: drop the partial buffer, free the state slot
             state.remove()
-            yield pd.DataFrame(
-                [], columns=[f.name for f in SECTION_STREAM_SCHEMA]
-            )
+            yield pd.DataFrame([], columns=SECTION_STREAM_SCHEMA.fieldNames())
             return
         r = SectionReassembler()
         if state.exists:
@@ -169,27 +163,10 @@ def section_reassembly_stream(
                 if raw is None:
                     continue
                 for sec in r.push(bytes(raw)):
-                    h = parse_section(sec)
-                    if h.get("table_id") is None:
-                        continue
-                    rows.append(
-                        (
-                            stream_id,
-                            pid,
-                            h["table_id"],
-                            h["section_length"],
-                            h["table_id_ext"],
-                            h["version"],
-                            h["current_next"],
-                            h["section_number"],
-                            h["last_section_number"],
-                            bool(h["crc_ok"]),
-                            sec,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SECTION_STREAM_SCHEMA]
-            )
+                    row = section_row(sec)
+                    if row is not None:
+                        rows.append((stream_id, pid) + row)
+            yield pd.DataFrame(rows, columns=SECTION_STREAM_SCHEMA.fieldNames())
         state.update((bytes(r.buf), bool(r.synced)))
         if idle_timeout_ms is not None:
             state.setTimeoutDuration(idle_timeout_ms)

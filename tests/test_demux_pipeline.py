@@ -185,3 +185,123 @@ def test_complete_tables_r6(spark):
     assert [s.section_number for s in t.sections] == [0, 1]
     assert bytes(t.sections[0].section_bytes) == s0  # re-ordered by number
     assert bytes(t.sections[1].section_bytes) == s1
+
+
+def test_psi_payload_edge_cases(spark):
+    """Payload corner cases of the decode made during reassembly. The
+    expected rows come from the codec's parse_section of the same bytes:
+    - an SDT service without a service descriptor: null type and provider,
+      name "" (and the first 0x48 descriptor wins over an earlier 0x59);
+    - a PMT without an ES loop gives no pmt_streams rows;
+    - PAT program 0 (the network PID) is a pat_programs row, not a program;
+    - a newer PAT version with current_next=0, and one with a broken CRC,
+      never replace the current table."""
+    from streamprocessors_spark.codec.psi import (
+        DESC_TAG_SERVICE,
+        DESC_TAG_SUBTITLING,
+        encode_pat,
+        encode_pmt,
+        encode_section,
+        encode_service_descriptor,
+        parse_section,
+        sectionize,
+    )
+
+    pat = encode_pat([(0, 0x10), (1, 0x100), (2, 0x200)], ts_id=7)
+    pending = encode_section(
+        psi.PSI_TABLE_ID_PAT, 7, 1, 0, 0, bytes([0, 3, 0xE3, 0x00]), current_next=0
+    )
+    broken = bytearray(encode_pat([(4, 0x400)], ts_id=7, version=2))
+    broken[-1] ^= 0xFF
+    pmt_es = encode_pmt(1, 0x101, [(0x1B, 0x101), (0x0F, 0x102)])
+    pmt_empty = encode_pmt(2, 0x201, [])
+    subtitling = bytes([DESC_TAG_SUBTITLING, 8]) + b"eng" + bytes(5)
+    descs = subtitling + encode_service_descriptor(1, "prov", "One")
+    sdt = encode_section(
+        psi.PSI_TABLE_ID_SDT,
+        7,
+        0,
+        0,
+        0,
+        bytes([0, 1, 0xFF])
+        + bytes([0, 1, 0xFC, 4 << 5, len(descs)])
+        + descs
+        + bytes([0, 2, 0xFC, 4 << 5, 0]),  # service 2: empty descriptor loop
+    )
+    carriage = [
+        (psi.PSI_PID_PAT, [pat, pending, bytes(broken)]),
+        (0x100, [pmt_es]),
+        (0x200, [pmt_empty]),
+        (psi.PSI_PID_SDT, [sdt]),
+    ]
+    buf = b"".join(
+        b"".join(sectionize(sec, pid, start_cc=i))
+        for pid, secs in carriage
+        for i, sec in enumerate(secs)
+    )
+    raw = spark.createDataFrame([("e", buf)], "stream_id STRING, value BINARY")
+    sections = demux.reassemble_sections(packets_from_binary_column(raw))
+    sections.cache().count()
+    assert sections.count() == 6
+
+    h = parse_section(pat)
+    want_pat = sorted(
+        ("e", h["table_id_ext"], h["version"], p["program_number"], p["reference_pid"])
+        for p in h["pas"]
+    )
+    got_pat = sorted(tuple(r) for r in demux.pat_programs(sections).collect())
+    assert got_pat == want_pat
+    assert ("e", 7, 0, 0, 0x10) in got_pat
+
+    want_pmt = sorted(
+        (
+            "e",
+            h["table_id_ext"],
+            pid,
+            h["version"],
+            h["pms"]["pcr_pid"],
+            s["stream_type"],
+            s["stream_type_name"],
+            s["elementary_pid"],
+        )
+        for pid, sec in ((0x100, pmt_es), (0x200, pmt_empty))
+        for h in [parse_section(sec)]
+        for s in h["pms"]["streams"]
+    )
+    got_pmt = sorted(tuple(r) for r in demux.pmt_streams(sections).collect())
+    assert got_pmt == want_pmt
+    assert {r[1] for r in got_pmt} == {1}
+
+    h = parse_section(sdt)
+    want_sdt = []
+    for s in h["sds"]["services"]:
+        d = next((d for d in s["descriptors"] if d["tag"] == DESC_TAG_SERVICE), None)
+        want_sdt.append(
+            (
+                "e",
+                h["table_id_ext"],
+                s["service_id"],
+                s["running_status"],
+                s["free_ca_mode"],
+                d["service_type"] if d else None,
+                d["provider_name"] if d else None,
+                d["service_name"] if d else "",
+            )
+        )
+    got_sdt = sorted(tuple(r) for r in demux.sdt_services(sections).collect())
+    assert got_sdt == sorted(want_sdt)
+    assert got_sdt[0][5:] == (1, "prov", "One")
+    assert got_sdt[1][5:] == (None, None, "")
+
+    summary = {
+        r.program_number: r
+        for r in demux.programs_summary(
+            demux.pat_programs(sections),
+            demux.pmt_streams(sections),
+            demux.sdt_services(sections),
+        ).collect()
+    }
+    assert set(summary) == {1, 2}  # program 0 dropped
+    assert (summary[1].service_name, summary[1].n_streams) == ("One", 2)
+    assert (summary[2].service_name, summary[2].n_streams) == ("", 0)
+    assert summary[2].pcr_pid is None

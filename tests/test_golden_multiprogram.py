@@ -23,11 +23,8 @@ N_PROGRAMS = 16
 _SAN_DIEGO = "/root/reference/mpeg2ts/utests/assets/san_diego_200kbps.ts"
 
 
-@pytest.fixture(scope="module")
-def capture(spark):
+def _multiprogram_ts(psi_interval: int = 40) -> bytes:
     from streamprocessors_spark.codec.fixtures import MuxSpec, ProgramSpec, build_ts
-    from streamprocessors_spark.operators.demux import reassemble_sections
-    from streamprocessors_spark.sources import packets_from_binary_column
 
     spec = MuxSpec(
         programs=[
@@ -40,10 +37,18 @@ def capture(spark):
             )
             for k in range(1, N_PROGRAMS + 1)
         ],
-        psi_interval=40,
+        psi_interval=psi_interval,
         es_payload_packets=25,
     )
-    buf = build_ts(spec)
+    return build_ts(spec)
+
+
+@pytest.fixture(scope="module")
+def capture(spark):
+    from streamprocessors_spark.operators.demux import reassemble_sections
+    from streamprocessors_spark.sources import packets_from_binary_column
+
+    buf = _multiprogram_ts()
     raw = spark.createDataFrame([("cap", buf)], "stream_id STRING, value BINARY")
     pkts = packets_from_binary_column(raw)
     return pkts, reassemble_sections(pkts)
@@ -107,6 +112,88 @@ def test_pat_version_update_r7(spark):
         (2, 0x110),
     ]
     assert all(p.pat_version == 1 for p in progs)
+
+
+def test_multiprogram_streaming_parity(spark, tmp_path):
+    """Batch/stream parity of the decoded PSI rows on the synthetic mux:
+    cut into 4 segment files at SDT continuation packets (so those SDT
+    sections straddle a cut and their partial buffers must ride the state
+    store), replayed one file per micro-batch through
+    section_reassembly_stream. Every column the stream shares with
+    reassemble_sections must match, the payload columns included."""
+    import pyspark.sql.types as T
+
+    from streamprocessors_spark.operators.demux import reassemble_sections
+    from streamprocessors_spark.sources import packets_from_binary_column
+    from streamprocessors_spark.streaming.runner import run_available_now
+    from streamprocessors_spark.streaming.stateful import (
+        SECTION_STREAM_SCHEMA,
+        section_reassembly_stream,
+    )
+
+    buf = _multiprogram_ts(psi_interval=5)  # 6 PSI bursts
+    n_pkts = len(buf) // 188
+    pkts = [buf[i * 188 : (i + 1) * 188] for i in range(n_pkts)]
+    # SDT packets without PUSI: the second and later packets of a section
+    cont = [
+        i
+        for i, p in enumerate(pkts)
+        if ((p[1] & 0x1F) << 8 | p[2]) == 0x11 and not p[1] & 0x40
+    ]
+    cuts = [0, cont[0], cont[len(cont) // 2], cont[-1], n_pkts]
+    assert len(set(cuts)) == 5
+    seg_dir = tmp_path / "segs"
+    seg_dir.mkdir()
+    for k, (a, b) in enumerate(zip(cuts, cuts[1:])):
+        p = seg_dir / f"seg{a:06d}.ts"  # the name carries the first packet index
+        p.write_bytes(b"".join(pkts[a:b]))
+        # deterministic ingest order: FileStreamSource sorts by mtime
+        os.utime(p, (1_700_000_000 + k, 1_700_000_000 + k))
+
+    bin_schema = T.StructType(
+        [
+            T.StructField("path", T.StringType()),
+            T.StructField("modificationTime", T.TimestampType()),
+            T.StructField("length", T.LongType()),
+            T.StructField("content", T.BinaryType()),
+        ]
+    )
+    files = (
+        spark.readStream.format("binaryFile")
+        .schema(bin_schema)
+        .option("maxFilesPerTrigger", 1)
+        .load(str(seg_dir))
+    )
+    staged = files.select(
+        F.lit("cap").alias("stream_id"),
+        F.col("content").alias("value"),
+        F.regexp_extract(F.col("path"), r"seg(\d+)\.ts", 1).cast("long").alias("base"),
+    )
+    psi_pids = [0x0, 0x11] + [0x100 + k * 16 for k in range(1, N_PROGRAMS + 1)]
+    pkts_s = packets_from_binary_column(staged, index_col="base")
+    sink = run_available_now(
+        section_reassembly_stream(
+            pkts_s.where(F.col("pid").isin(psi_pids)).where(F.col("sync_ok"))
+        )
+    )
+    raw = spark.createDataFrame([("cap", buf)], "stream_id STRING, value BINARY")
+    batch = reassemble_sections(packets_from_binary_column(raw), psi_pids=psi_pids)
+
+    cols = SECTION_STREAM_SCHEMA.fieldNames()
+    assert {"pas", "pms", "sds"} <= set(cols)
+    stream_rows = sink.select(*cols).collect()
+    batch_rows = batch.select(*cols).collect()
+    assert sorted(map(repr, stream_rows)) == sorted(map(repr, batch_rows))
+
+    # 6 bursts of PAT + 16 PMTs + SDT, each with its payload decoded
+    assert len(stream_rows) == 6 * (N_PROGRAMS + 2)
+    by_tid: dict[int, list] = {}
+    for r in stream_rows:
+        by_tid.setdefault(r.table_id, []).append(r)
+    assert [len(r.pas) for r in by_tid[0x00]] == [N_PROGRAMS] * 6
+    assert all(len(r.pms.streams) == 2 for r in by_tid[0x02])
+    assert all(len(r.sds) == N_PROGRAMS for r in by_tid[0x42])
+    assert all(r.crc_ok for r in stream_rows)
 
 
 @pytest.mark.skipif(

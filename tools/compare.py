@@ -186,8 +186,5 @@ def main(argv: list[str]) -> int:
 
 
 if __name__ == "__main__":
-    # Run as a script, sys.path[0] is tools/, whose profile.py would
-    # shadow the stdlib module that cProfile (imported by pyspark) needs;
-    # put the repo root in its place.
-    sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     raise SystemExit(main(sys.argv[1:]))

@@ -6,8 +6,8 @@ plans/r<round>/<name>_<tag>.txt, then time min-of-3 with BOTH the bench action
 (§1.5) and the UI is enabled so stage/shuffle metrics can be pulled from
 the REST API while the session lives.
 
-Usage: python tools/profile.py <round> <tag> <query> [query...]
-       python tools/profile.py <round> <tag> --top N  (N slowest from BENCH_LOCAL)
+Usage: python tools/query_profile.py <round> <tag> <query> [query...]
+       python tools/query_profile.py <round> <tag> --top N  (N slowest from BENCH_LOCAL)
 
 <round> is the optimization round number (e.g. 13); it names the output
 dir plans/r<round>/ and the Spark app.
@@ -22,11 +22,7 @@ import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# Run as a script, sys.path[0] is this file's dir, where this module
-# would shadow the stdlib ``profile`` that cProfile (imported by pyspark)
-# needs; put the repo root in its place instead.
-sys.path[0] = REPO
+sys.path.insert(0, REPO)
 
 
 def main() -> None:

@@ -27,10 +27,7 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# Run as a script, sys.path[0] is tools/, whose profile.py would shadow
-# the stdlib module that cProfile (imported by pyspark) needs; put the
-# repo root in its place.
-sys.path[0] = REPO
+sys.path.insert(0, REPO)
 
 PARTS = (32, 8, 4, 2, 1)
 QUERY_PARTS = (32, 2)
