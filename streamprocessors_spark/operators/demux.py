@@ -27,7 +27,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -204,19 +204,42 @@ def reassemble_sections(
     return src.mapInPandas(gen, schema=SECTION_SCHEMA)
 
 
+# R6/R7: a PSI table is the set of sections sharing this key and a version
+TABLE_KEY = ("stream_id", "pid", "table_id", "table_id_ext")
+
+
+def is_complete(n_sections: Column, last_section_number: Column) -> Column:
+    """R6: a table version is complete once all ``last_section_number + 1``
+    of its distinct sections arrived (psi_table_dec.c:59-205)."""
+    return n_sections == last_section_number + 1
+
+
 def latest_sections(sections: DataFrame) -> DataFrame:
-    """R7 current-table register: keep the latest complete version per
-    (stream, pid, table_id, table_id_ext); skip current_next=0 (T3) and
-    CRC failures; dedup identical re-broadcasts (PSI repeats every
-    psi_interval packets)."""
-    w = Window.partitionBy(
-        "stream_id", "pid", "table_id", "table_id_ext", "section_number"
-    ).orderBy(F.col("version").desc(), F.col("section_index").desc())
+    """R7 current-table register: the sections of the latest *complete*
+    version per table key; skip current_next=0 (T3) and CRC failures;
+    keep the last-arrived copy of each re-broadcast section (PSI repeats
+    every psi_interval packets). A newer version still missing sections
+    never replaces the current table, as the reference swaps a table in
+    only once it is complete (psi_table_dec.c).
+
+    Every window partitions on the table key, so the one exchange on that
+    key (and one sort) serves all three."""
+    table = Window.partitionBy(*TABLE_KEY)
+    arrival = table.orderBy("version", "section_number", F.col("section_index").desc())
+    version = Window.partitionBy(*TABLE_KEY, "version")
+    copy = F.struct("version", "section_number")
+    complete = is_complete(
+        F.count(F.lit(1)).over(version), F.max("last_section_number").over(version)
+    )
     return (
         sections.where(F.col("crc_ok") & (F.col("current_next") == 1))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
+        # the first row of each (version, section_number) run is its latest copy
+        .withColumn("prev", F.lag(copy).over(arrival))
+        .where(~F.col("prev").eqNullSafe(copy))
+        .withColumn("complete_version", F.when(complete, F.col("version")))
+        .withColumn("latest", F.max("complete_version").over(table))
+        .where(F.col("version") == F.col("latest"))
+        .drop("prev", "complete_version", "latest")
     )
 
 
@@ -415,9 +438,7 @@ def complete_tables(sections: DataFrame) -> DataFrame:
     """
     keyed = sections.where(F.col("crc_ok") & (F.col("current_next") == 1))
     return (
-        keyed.groupBy(
-            "stream_id", "pid", "table_id", "table_id_ext", "version"
-        )
+        keyed.groupBy(*TABLE_KEY, "version")
         .agg(
             F.max("last_section_number").alias("last_section_number"),
             # bounded: <= 256 sections per table version (section_number is
@@ -426,8 +447,6 @@ def complete_tables(sections: DataFrame) -> DataFrame:
                 F.collect_set(F.struct("section_number", "section_bytes"))
             ).alias("sections"),
         )
-        .where(
-            F.size("sections") == F.col("last_section_number") + 1
-        )
+        .where(is_complete(F.size("sections"), F.col("last_section_number")))
         .withColumn("n_sections", F.size("sections"))
     )

@@ -48,16 +48,26 @@ def ordered_registry() -> dict[str, Query]:
     return {n: REGISTRY[n] for n in sorted(REGISTRY, key=lambda n: rounds.get(n, 0))}
 
 
+# Registration order: ties in ordered_registry() keep it, so this tuple
+# fixes the driver order. Oracles do not depend on it (see registry.py).
+PLAN_MODULES = (
+    "relational",
+    "ts_pipeline",
+    "llm_ops",
+    "advanced",
+    "streaming_queries",
+    "tpch_decision",
+    "analytics",
+    "feature_eng",
+    "data_quality",
+    "mm_dedup",
+    "graph_ops",
+)
+
+
 def load_all() -> None:
     """Import every plan module so its @register decorators run."""
-    import streamprocessors_spark.plans.relational  # noqa: F401
-    import streamprocessors_spark.plans.ts_pipeline  # noqa: F401
-    import streamprocessors_spark.plans.llm_ops  # noqa: F401
-    import streamprocessors_spark.plans.streaming_queries  # noqa: F401
-    import streamprocessors_spark.plans.advanced  # noqa: F401
-    import streamprocessors_spark.plans.tpch_decision  # noqa: F401
-    import streamprocessors_spark.plans.analytics  # noqa: F401
-    import streamprocessors_spark.plans.feature_eng  # noqa: F401
-    import streamprocessors_spark.plans.data_quality  # noqa: F401
-    import streamprocessors_spark.plans.mm_dedup  # noqa: F401
-    import streamprocessors_spark.plans.graph_ops  # noqa: F401
+    import importlib
+
+    for mod in PLAN_MODULES:
+        importlib.import_module(f"{__name__}.{mod}")

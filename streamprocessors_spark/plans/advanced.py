@@ -26,7 +26,7 @@ from pyspark.sql.window import Window
 
 from streamprocessors_spark.functions import dialect as D
 from streamprocessors_spark.functions.dialect import DUCK, SPARK
-from streamprocessors_spark.plans.registry import register
+from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
 
 
@@ -1965,9 +1965,33 @@ def _cascade_verdict_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _attrition_oracle() -> str:
+    return f"""
+    WITH v AS (
+      {_cascade_oracle()}
+    ),
+    per AS (
+      SELECT d.source, COALESCE(v.dropped_by, 'kept') AS stage,
+             CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(d.n_chars) AS BIGINT) AS n_chars
+      FROM v JOIN documents d ON d.doc_id = v.doc_id
+      GROUP BY d.source, COALESCE(v.dropped_by, 'kept')
+    ),
+    stot AS (
+      SELECT source, CAST(sum(n_docs) AS BIGINT) AS src_docs
+      FROM per GROUP BY source
+    )
+    SELECT p.source, p.stage, p.n_docs, p.n_chars,
+           {D.floor_round(DUCK,
+             "CAST(p.n_docs AS DOUBLE) / CAST(s.src_docs AS DOUBLE)", 6)}
+             AS stage_frac
+    FROM per p JOIN stot s ON s.source = p.source
+    """
+
+
 @register(
     "cascade_stage_attrition",
-    oracle=None,  # wired below: wraps dedup_cascade_verdict's oracle
+    oracle=_attrition_oracle,
     doc="The attrition table every dedup paper publishes (RefinedWeb "
     "Table 2 shape): per source x cascade stage, how many documents "
     "and how much character mass each stage removed, with 'kept' as "
@@ -2019,38 +2043,39 @@ def cascade_stage_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_attrition_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    REGISTRY["cascade_stage_attrition"].oracle = f"""
-    WITH v AS (
-      {_cascade_oracle()}
+def _leakage_oracle() -> str:
+    # the hash must name a qualified column here (kl x documents join)
+    ehash = D.md5int(DUCK, "k.doc_id::VARCHAR")
+    return f"""
+    WITH kl AS (
+      {REGISTRY["dedup_keep_list"].oracle}
     ),
-    per AS (
-      SELECT d.source, COALESCE(v.dropped_by, 'kept') AS stage,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(d.n_chars) AS BIGINT) AS n_chars
-      FROM v JOIN documents d ON d.doc_id = v.doc_id
-      GROUP BY d.source, COALESCE(v.dropped_by, 'kept')
+    lab AS (
+      SELECT k.doc_id, d.source, k.canonical,
+             CAST({ehash} % 10 = 0 AS INT) AS is_eval
+      FROM kl k JOIN documents d ON d.doc_id = k.doc_id
     ),
-    stot AS (
-      SELECT source, CAST(sum(n_docs) AS BIGINT) AS src_docs
-      FROM per GROUP BY source
+    tc AS (
+      SELECT DISTINCT canonical FROM lab WHERE is_eval = 0
+    ),
+    ev AS (
+      SELECT l.source,
+             CAST(tc.canonical IS NOT NULL AS INT) AS leaky
+      FROM lab l LEFT JOIN tc ON tc.canonical = l.canonical
+      WHERE l.is_eval = 1
     )
-    SELECT p.source, p.stage, p.n_docs, p.n_chars,
+    SELECT source, CAST(count(*) AS BIGINT) AS n_eval,
+           CAST(sum(leaky) AS BIGINT) AS n_leaky,
            {D.floor_round(DUCK,
-             "CAST(p.n_docs AS DOUBLE) / CAST(s.src_docs AS DOUBLE)", 6)}
-             AS stage_frac
-    FROM per p JOIN stot s ON s.source = p.source
+             "CAST(sum(leaky) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)}
+             AS leak_frac
+    FROM ev GROUP BY source
     """
-
-
-_wire_attrition_oracle()
 
 
 @register(
     "train_eval_split_leakage",
-    oracle=None,  # wired below: wraps dedup_keep_list's oracle
+    oracle=_leakage_oracle,
     doc="Train/eval split leakage audit — the check every held-out split "
     "needs AFTER near-dup clustering (an eval document whose near-dup "
     "cluster contains a train member is contaminated even though exact "
@@ -2106,38 +2131,3 @@ def train_eval_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             + " as leak_frac",
         )
     )
-
-
-def _wire_leakage_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    # the hash must name a qualified column here (kl x documents join)
-    ehash = D.md5int(DUCK, "k.doc_id::VARCHAR")
-    REGISTRY["train_eval_split_leakage"].oracle = f"""
-    WITH kl AS (
-      {REGISTRY["dedup_keep_list"].oracle}
-    ),
-    lab AS (
-      SELECT k.doc_id, d.source, k.canonical,
-             CAST({ehash} % 10 = 0 AS INT) AS is_eval
-      FROM kl k JOIN documents d ON d.doc_id = k.doc_id
-    ),
-    tc AS (
-      SELECT DISTINCT canonical FROM lab WHERE is_eval = 0
-    ),
-    ev AS (
-      SELECT l.source,
-             CAST(tc.canonical IS NOT NULL AS INT) AS leaky
-      FROM lab l LEFT JOIN tc ON tc.canonical = l.canonical
-      WHERE l.is_eval = 1
-    )
-    SELECT source, CAST(count(*) AS BIGINT) AS n_eval,
-           CAST(sum(leaky) AS BIGINT) AS n_leaky,
-           {D.floor_round(DUCK,
-             "CAST(sum(leaky) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 6)}
-             AS leak_frac
-    FROM ev GROUP BY source
-    """
-
-
-_wire_leakage_oracle()

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 
 from streamprocessors_spark.functions import dialect as D
 from streamprocessors_spark.functions.dialect import DUCK, SPARK
-from streamprocessors_spark.plans.registry import register
+from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
 
 # ---------------------------------------------------------------------------
@@ -661,7 +661,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_quality_score",
-    oracle=None,  # wired below: shares quality_classifier_score's oracle
+    oracle=lambda: REGISTRY["quality_classifier_score"].oracle,
     doc="Streaming twin of quality_classifier_score — the deployment "
     "shape of a trained quality filter: the pocket weights are trained "
     "batch-side on the existing corpus, and every ARRIVING document is "
@@ -723,14 +723,3 @@ def stream_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(if(s > 0, 1, -1) as int) as pred",
         "if(s > 0, 1, -1) = y as correct",
     )
-
-
-def _wire_stream_quality_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("quality_classifier_score")
-    if batch is not None:
-        REGISTRY["stream_quality_score"].oracle = batch.oracle
-
-
-_wire_stream_quality_oracle()

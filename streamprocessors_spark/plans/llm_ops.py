@@ -40,7 +40,7 @@ from streamprocessors_spark.functions import multimodal as MM
 from streamprocessors_spark.functions import textprep as TP
 from streamprocessors_spark.functions import vectors as V
 from streamprocessors_spark.functions.dialect import DUCK, SPARK
-from streamprocessors_spark.plans.registry import register
+from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
 
 # Jaccard acceptance threshold for near-dup verification: 2*inter >= union
@@ -6058,26 +6058,6 @@ def _nb_score_ctes(d: str) -> str:
       FROM contrib GROUP BY doc_id, actual_lang, lang)"""
 
 
-# Distinct training-slice languages per corpus — the NB model's class
-# axis (single-digit rows; the _KMEANS_TRAINED_CACHE deployment pattern:
-# trained once, shipped to every scorer).
-_NB_LANGS_CACHE: dict = {}
-
-
-def _nb_langs(spark: SparkSession, sf_dir: str) -> list[str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_stale_app_entries(_NB_LANGS_CACHE, key[0])
-    if key not in _NB_LANGS_CACHE:
-        tr = read_table(spark, sf_dir, "documents").where(
-            f"doc_id % {LM_TRAIN_MOD} = 0"
-        )
-        # control-plane collect: one row per language
-        _NB_LANGS_CACHE[key] = sorted(
-            r["lang"] for r in tr.select("lang").distinct().collect()
-        )
-    return _NB_LANGS_CACHE[key]
-
-
 # Trained NB model artifacts, memoized per (app, corpus) — the KN/LM
 # train-once-serve-many precedent (VERDICT r12 #6): the class axis with
 # priors and token totals (single-digit rows, collected), the two
@@ -6120,7 +6100,12 @@ def _nb_trained(spark: SparkSession, sf_dir: str) -> dict:
         docs_total = sum(d for d, _ in cls.values())
         v = wc.select("tw").distinct().count()
         return {
-            "cls": sorted((lg, d, t) for lg, (d, t) in cls.items()),
+            # a class without training tokens has no `tc` row, so the
+            # oracle's inner join drops it from the argmax; its documents
+            # still count in docs_total
+            "cls": sorted(
+                (lg, d, t) for lg, (d, t) in cls.items() if lg is not None and t > 0
+            ),
             "docs_total": int(docs_total),
             "v": int(v),
             "wc": wc,
@@ -6163,23 +6148,28 @@ def _nb_trained(spark: SparkSession, sf_dir: str) -> dict:
     tags=("llm", "quality", "text"),
 )
 def nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Serve the memoized trained model (_nb_trained): the class axis and
-    # the two scalars become a broadcast VALUES literal, the vocab x
-    # classes likelihood table reads the checkpointed artifact, and the
-    # per-call cost is EXACTLY the scoring pass — one corpus scan,
+    # Serve the memoized trained model (_nb_trained): the class axis
+    # becomes a broadcast class frame and the two scalars become
+    # literals, the vocab x classes likelihood table reads the
+    # checkpointed artifact, and the per-call cost is EXACTLY the scoring pass — one corpus scan,
     # explode, class fan-out, likelihood join, two map-side-combinable
     # aggregations. The fixed-point log2 expressions are the SAME SQL
     # strings the inline CTE form used, over the same integer values,
     # so every score is bit-identical (the oracle re-derives the model
     # from scratch and the hash gate proves it).
     model = _nb_trained(spark, sf_dir)
-    rows = ", ".join(
-        f"('{lg}', CAST({d} AS BIGINT), CAST({t} AS BIGINT))"
-        for lg, d, t in model["cls"]
-    )
-    cls_lit = spark.sql(
-        f"SELECT col1 AS lang, col2 AS docs_c, col3 AS tok_c"
-        f" FROM (VALUES {rows})"
+    # cls_idx: lang-ASC position on the class axis, the packed argmax
+    # key's tie-break (lowest lang wins, as in the oracle's ORDER BY).
+    # Built from pandas: under Arrow that is a local relation, which
+    # broadcasts without a job.
+    import pandas as pd
+
+    cls_df = spark.createDataFrame(
+        pd.DataFrame(
+            [(lg, d, t, i) for i, (lg, d, t) in enumerate(model["cls"])],
+            columns=["lang", "docs_c", "tok_c", "cls_idx"],
+        ),
+        "lang string, docs_c bigint, tok_c bigint, cls_idx int",
     )
     prior_q = (
         f"{_log2q(SPARK, 'docs_c')} - {_log2q(SPARK, str(model['docs_total']))}"
@@ -6198,8 +6188,8 @@ def nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wc = model["wc"]
     contrib = (
-        # bounded: cls_lit is one row per language (single digits)
-        tok.crossJoin(F.broadcast(cls_lit))
+        # bounded: cls_df is one row per language (single digits)
+        tok.crossJoin(F.broadcast(cls_df))
         .join(
             wc.selectExpr("lang as wlang", "tw", "cnt"),
             (F.col("lang") == F.col("wlang")) & (F.col("w") == F.col("tw")),
@@ -6209,18 +6199,13 @@ def nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "actual_lang",
             "lang",
+            "cls_idx",
             f"{prior_q} as prior_q",
             f"{cq} as cq",
         )
     )
-    s = contrib.groupBy("doc_id", "actual_lang", "lang").agg(
+    s = contrib.groupBy("doc_id", "actual_lang", "lang", "cls_idx").agg(
         F.expr("cast(any_value(prior_q) + sum(cq) as bigint)").alias("s_q")
-    )
-    # class index for the packed argmax key: lang-ASC positions (the
-    # trained class axis — `s` fans out over exactly those languages)
-    langs = [lg for lg, _, _ in model["cls"]]
-    idx_case = " ".join(
-        f"WHEN '{lg}' THEN {i}" for i, lg in enumerate(langs)
     )
     return (
         s.selectExpr(
@@ -6228,7 +6213,7 @@ def nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "actual_lang",
             "lang",
             "s_q",
-            f"s_q * {NB_CLS_SPAN} - (CASE lang {idx_case} END) as akey",
+            f"s_q * {NB_CLS_SPAN} - cls_idx as akey",
         )
         .groupBy("doc_id")
         .agg(
@@ -7487,7 +7472,7 @@ def zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_ann_topk",
-    oracle=None,  # wired below: shares ann_bruteforce_topk's oracle
+    oracle=lambda: REGISTRY["ann_bruteforce_topk"].oracle,
     doc="Incremental exact ANN — the streaming twin of "
     "ann_bruteforce_topk: corpus vectors ARRIVE as a stream, each "
     "micro-batch is scored against the (broadcast, query-sized) probe "
@@ -7547,23 +7532,12 @@ def stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_ann_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY  # noqa: PLC0415
-
-    batch = REGISTRY.get("ann_bruteforce_topk")
-    if batch is not None:
-        REGISTRY["stream_ann_topk"].oracle = batch.oracle
-
-
-_wire_stream_ann_oracle()
-
-
 RES_STREAM_SALTS = 16  # state fan-out: 16 groups x RES_K entries
 
 
 @register(
     "stream_weighted_reservoir",
-    oracle=None,  # wired below: shares weighted_reservoir_sample's oracle
+    oracle=lambda: REGISTRY["weighted_reservoir_sample"].oracle,
     doc="Streaming fixed-size weighted sample — the eighth shared-oracle "
     "twin, and a pure REUSE of ann_topk_stream: A-ES bottom-k by key is "
     "top-k by negated key (exact as double: keys < 2^45 << 2^53), so "
@@ -7614,17 +7588,6 @@ def stream_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("aes_key", "doc_id")
         .limit(RES_K)
     )
-
-
-def _wire_stream_reservoir_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY  # noqa: PLC0415
-
-    batch = REGISTRY.get("weighted_reservoir_sample")
-    if batch is not None:
-        REGISTRY["stream_weighted_reservoir"].oracle = batch.oracle
-
-
-_wire_stream_reservoir_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -8768,18 +8731,30 @@ def packing_positions(
 # ---------------------------------------------------------------------------
 
 
-def _packing_oracle() -> str:
-    """The tokenized_context_packing oracle, reused verbatim as a
-    subquery so the efficiency report measures the EXACT artifact the
-    packing query ships (one definition, no drift)."""
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    return REGISTRY["tokenized_context_packing"].oracle
+def _packing_stats_oracle() -> str:
+    """Wraps the tokenized_context_packing oracle verbatim as a subquery,
+    so the report measures the exact artifact the packing query ships."""
+    return f"""
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_bins,
+           CAST(sum(CASE WHEN n_tokens = {_PACK_W} THEN 1 ELSE 0 END)
+             AS BIGINT) AS n_full_bins,
+           CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+           CAST(sum({_PACK_W} - n_tokens) AS BIGINT) AS pad_tokens,
+           CAST(sum(n_seps) AS BIGINT) AS sep_tokens,
+           CAST(sum(n_docs) AS BIGINT) AS n_doc_spans,
+           CAST(max(n_docs) AS BIGINT) AS max_docs_bin,
+           {D.floor_round(DUCK,
+             "CAST(sum(n_tokens) AS DOUBLE) /"
+             f" CAST(count(*) * {_PACK_W} AS DOUBLE)", 6)} AS fill_q
+    FROM ({REGISTRY["tokenized_context_packing"].oracle}) pk
+    GROUP BY source
+    """
 
 
 @register(
     "packing_efficiency_stats",
-    oracle=None,  # wired below: wraps the packing oracle as a subquery
+    oracle=_packing_stats_oracle,
     doc=f"Packing waste report over the tokenized_context_packing "
     "artifact, per source: bin counts, full-bin counts, token totals, "
     f"padding implied by the partial tail bin (bins hold {_PACK_W} "
@@ -8819,30 +8794,6 @@ def packing_efficiency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("fill_q"),
         )
     )
-
-
-def _wire_packing_stats_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    REGISTRY["packing_efficiency_stats"].oracle = f"""
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_bins,
-           CAST(sum(CASE WHEN n_tokens = {_PACK_W} THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_full_bins,
-           CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-           CAST(sum({_PACK_W} - n_tokens) AS BIGINT) AS pad_tokens,
-           CAST(sum(n_seps) AS BIGINT) AS sep_tokens,
-           CAST(sum(n_docs) AS BIGINT) AS n_doc_spans,
-           CAST(max(n_docs) AS BIGINT) AS max_docs_bin,
-           {D.floor_round(DUCK,
-             "CAST(sum(n_tokens) AS DOUBLE) /"
-             f" CAST(count(*) * {_PACK_W} AS DOUBLE)", 6)} AS fill_q
-    FROM ({_packing_oracle()}) pk
-    GROUP BY source
-    """
-
-
-_wire_packing_stats_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -9548,9 +9499,30 @@ def dedup_minhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _confusion_oracle() -> str:
+    return f"""
+    WITH cls AS (
+      {REGISTRY["nb_lang_classifier"].oracle}
+    ),
+    cm AS (
+      SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
+      FROM cls GROUP BY lang, pred_lang
+    ),
+    ctot AS (
+      SELECT lang, CAST(sum(n_docs) AS BIGINT) AS n_true
+      FROM cm GROUP BY lang
+    )
+    SELECT c.lang, c.pred_lang, c.n_docs, t.n_true,
+           {D.floor_round(DUCK,
+             "CAST(c.n_docs AS DOUBLE) / CAST(t.n_true AS DOUBLE)", 6)}
+             AS frac
+    FROM cm c JOIN ctot t ON t.lang = c.lang
+    """
+
+
 @register(
     "lang_id_confusion_matrix",
-    oracle=None,  # wired below: wraps nb_lang_classifier's oracle
+    oracle=_confusion_oracle,
     doc="The classifier-eval artifact the lang-id filtering threshold "
     "is chosen from: the (true lang x predicted lang) confusion matrix "
     "of the trained Naive Bayes classifier over its held-out slice, "
@@ -9584,32 +9556,6 @@ def lang_id_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         + " as frac",
     )
-
-
-def _wire_confusion_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    REGISTRY["lang_id_confusion_matrix"].oracle = f"""
-    WITH cls AS (
-      {REGISTRY["nb_lang_classifier"].oracle}
-    ),
-    cm AS (
-      SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
-      FROM cls GROUP BY lang, pred_lang
-    ),
-    ctot AS (
-      SELECT lang, CAST(sum(n_docs) AS BIGINT) AS n_true
-      FROM cm GROUP BY lang
-    )
-    SELECT c.lang, c.pred_lang, c.n_docs, t.n_true,
-           {D.floor_round(DUCK,
-             "CAST(c.n_docs AS DOUBLE) / CAST(t.n_true AS DOUBLE)", 6)}
-             AS frac
-    FROM cm c JOIN ctot t ON t.lang = c.lang
-    """
-
-
-_wire_confusion_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -9721,9 +9667,30 @@ def ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cluster_hist_oracle() -> str:
+    return f"""
+    WITH kl AS (
+      {REGISTRY["dedup_keep_list"].oracle}
+    ),
+    sz AS (
+      SELECT canonical, CAST(count(*) AS BIGINT) AS csize
+      FROM kl GROUP BY canonical
+    ),
+    b AS (
+      SELECT csize, {_log2q(DUCK, "csize")} // 1024 AS bucket FROM sz
+    )
+    SELECT CAST(bucket AS INT) AS bucket,
+           CAST((1::BIGINT << bucket) AS BIGINT) AS lo_size,
+           CAST((1::BIGINT << (bucket + 1)) - 1 AS BIGINT) AS hi_size,
+           CAST(count(*) AS BIGINT) AS n_clusters,
+           CAST(sum(csize) AS BIGINT) AS n_docs
+    FROM b GROUP BY bucket
+    """
+
+
 @register(
     "dedup_cluster_size_histogram",
-    oracle=None,  # wired below: wraps dedup_keep_list's oracle
+    oracle=_cluster_hist_oracle,
     doc="Near-dup cluster-size distribution in power-of-two buckets — "
     "the figure every dedup paper publishes (how much of the corpus "
     "sits in 2-member pairs vs boilerplate mega-clusters decides "
@@ -9761,31 +9728,6 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
         )
     )
-
-
-def _wire_cluster_hist_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    import streamprocessors_spark.plans.advanced as _adv  # noqa: F401
-
-    REGISTRY["dedup_cluster_size_histogram"].oracle = f"""
-    WITH kl AS (
-      {REGISTRY["dedup_keep_list"].oracle}
-    ),
-    sz AS (
-      SELECT canonical, CAST(count(*) AS BIGINT) AS csize
-      FROM kl GROUP BY canonical
-    ),
-    b AS (
-      SELECT csize, {_log2q(DUCK, "csize")} // 1024 AS bucket FROM sz
-    )
-    SELECT CAST(bucket AS INT) AS bucket,
-           CAST((1::BIGINT << bucket) AS BIGINT) AS lo_size,
-           CAST((1::BIGINT << (bucket + 1)) - 1 AS BIGINT) AS hi_size,
-           CAST(count(*) AS BIGINT) AS n_clusters,
-           CAST(sum(csize) AS BIGINT) AS n_docs
-    FROM b GROUP BY bucket
-    """
 
 
 def _outlier_sql(d: str, table: str = "embeddings") -> str:
@@ -9844,6 +9786,3 @@ def embedding_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(outlier_rank as int) as outlier_rank",
         )
     )
-
-
-_wire_cluster_hist_oracle()

@@ -49,7 +49,7 @@ from pyspark.sql.window import Window
 from streamprocessors_spark.functions import dialect as D
 from streamprocessors_spark.functions import multimodal as MM
 from streamprocessors_spark.functions.dialect import DUCK, SPARK
-from streamprocessors_spark.plans.registry import register
+from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
 
 IMG_W, IMG_H = MM.PPM_W, MM.PPM_H  # 8 x 6 fixture raster
@@ -413,7 +413,7 @@ def dedup_image_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_image_phash",
-    oracle=None,  # wired below: shares dedup_image_phash's oracle
+    oracle=lambda: REGISTRY["dedup_image_phash"].oracle,
     doc="Incremental image near-dup detection — the streaming twin of "
     "dedup_image_phash and the 'new crawl shard arrives -> dedup its "
     "images against the existing index' deployment shape. The dHash "
@@ -483,17 +483,6 @@ def stream_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("hamming") <= IMG_MAX_HAMMING)
     )
-
-
-def _wire_stream_image_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("dedup_image_phash")
-    if batch is not None:
-        REGISTRY["stream_image_phash"].oracle = batch.oracle
-
-
-_wire_stream_image_oracle()
 
 
 # ---------------------------------------------------------------------------

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamprocessors_spark.functions import money as M
-from streamprocessors_spark.plans.registry import register
+from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
 from streamprocessors_spark.streaming.runner import (
     run_available_now,
@@ -423,7 +423,7 @@ def stream_es_restamp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_quality_filter",
-    oracle=None,  # replaced below: shares quality_filter_verdict's oracle
+    oracle=lambda: REGISTRY["quality_filter_verdict"].oracle,
     doc="Streaming twin of quality_filter_verdict: the Gopher-style "
     "keep/drop rule battery as a continuous cleaning pass over the "
     "document stream — stateless projection, availableNow, append mode; "
@@ -450,7 +450,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_pii_redact",
-    oracle=None,  # replaced below: shares text_pii_redact's oracle
+    oracle=lambda: REGISTRY["text_pii_redact"].oracle,
     doc="Streaming twin of text_pii_redact: the PII scrubbing pass as a "
     "continuous projection over the document stream — new crawl shards "
     "redacted as they land, availableNow, append mode. Hash-matches the "
@@ -471,7 +471,7 @@ def stream_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_decontaminate",
-    oracle=None,  # replaced below: shares decontaminate_ngram_overlap's oracle
+    oracle=lambda: REGISTRY["decontaminate_ngram_overlap"].oracle,
     doc="Streaming twin of decontaminate_ngram_overlap — the production "
     "ingest shape: the benchmark/eval gram set is STATIC (fixed kB-MB "
     "suite) while corpus shards arrive as a stream; each micro-batch's "
@@ -523,7 +523,7 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_approx_distinct_hll",
-    oracle=None,  # replaced below: shares approx_distinct_hll's oracle
+    oracle=lambda: REGISTRY["approx_distinct_hll"].oracle,
     doc="Streaming twin of approx_distinct_hll — the mergeable-sketch "
     "streaming pattern: per-bucket keyed state (exactly m=256 tiny rows "
     "regardless of stream length) holds the max-rho register; each "
@@ -615,7 +615,7 @@ def minhash_band_stream(docs: DataFrame) -> DataFrame:
 
 @register(
     "stream_dedup_minhash",
-    oracle=None,  # replaced below: shares dedup_minhash_lsh's oracle
+    oracle=lambda: REGISTRY["dedup_minhash_lsh"].oracle,
     doc="Incremental MinHash-LSH dedup — the production 'new shard "
     "arrives -> dedup against the existing corpus signature store' "
     "shape (VERDICT r4 missing #2; the reference analog is its "
@@ -678,7 +678,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_repeated_ngram_spans",
-    oracle=None,  # replaced below: shares repeated_ngram_spans's oracle
+    oracle=lambda: REGISTRY["repeated_ngram_spans"].oracle,
     doc="Incremental repeated-substring detection — the streaming twin "
     "of repeated_ngram_spans and the second stateful dedup operator "
     "(after stream_dedup_minhash): per-gram state (bucketed by "
@@ -736,7 +736,7 @@ def stream_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_bm25_topk",
-    oracle=None,  # replaced below: shares bm25_topk's oracle
+    oracle=lambda: REGISTRY["bm25_topk"].oracle,
     doc="Incremental BM25 retrieval — the streaming twin closing the "
     "retrieval family (after the dedup, substring, decontamination and "
     "HLL twins; VERDICT r5 #7). The POSTINGS (per-(doc, term) tf) and "
@@ -792,34 +792,39 @@ def stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_rank(tf, stats)
 
 
-def _wire_shared_stream_oracles() -> None:
-    """Share the batch oracle texts (same rules, same fixture, so the
-    streaming results hash-match the batch SQL). Imports llm_ops for its
-    registration side effect first — this module must stay importable
-    standalone, not only via load_all()'s happens-to-be-right ordering."""
-    import streamprocessors_spark.plans.llm_ops  # noqa: F401
-    from streamprocessors_spark.plans.registry import REGISTRY
+def _line_dedup_oracle() -> str:
+    """stream_line_dedup's registry shape (repeated lines only) is its own
+    projection, not the batch per-doc rebuild — derive its oracle from the
+    same llm_ops constants so batch and stream can never drift apart."""
+    from streamprocessors_spark.functions import dialect as D
+    from streamprocessors_spark.functions.dialect import DUCK
+    from streamprocessors_spark.plans.llm_ops import (
+        LINE_SEG_SPAN,
+        LINE_SEG_W,
+    )
 
-    for stream_name, batch_name in [
-        ("stream_quality_filter", "quality_filter_verdict"),
-        ("stream_pii_redact", "text_pii_redact"),
-        ("stream_dedup_minhash", "dedup_minhash_lsh"),
-        ("stream_repeated_ngram_spans", "repeated_ngram_spans"),
-        ("stream_decontaminate", "decontaminate_ngram_overlap"),
-        ("stream_approx_distinct_hll", "approx_distinct_hll"),
-        ("stream_bm25_topk", "bm25_topk"),
-    ]:
-        batch = REGISTRY.get(batch_name)
-        if batch is not None:
-            REGISTRY[stream_name].oracle = batch.oracle
-
-
-_wire_shared_stream_oracles()
+    return f"""
+    WITH w AS (SELECT doc_id, {D.words(DUCK)} AS ws FROM documents),
+    w2 AS (SELECT doc_id, ws FROM w WHERE len(ws) > 0),
+    s AS (SELECT array_to_string(
+                   ws[(i*{LINE_SEG_W}+1):(i*{LINE_SEG_W}+{LINE_SEG_W})],
+                   ' ') AS seg,
+                 doc_id * {LINE_SEG_SPAN} + i AS pk
+          FROM w2, unnest(range(0, (len(ws) + {LINE_SEG_W - 1})
+                                   // {LINE_SEG_W})) AS t(i)),
+    a AS (SELECT seg, min(pk) AS mpk, CAST(count(*) AS BIGINT) AS n_occ
+          FROM s GROUP BY seg)
+    SELECT seg,
+           CAST(mpk // {LINE_SEG_SPAN} AS BIGINT) AS first_doc,
+           CAST(mpk % {LINE_SEG_SPAN} AS BIGINT) AS first_sidx,
+           n_occ
+    FROM a WHERE n_occ >= 2
+    """
 
 
 @register(
     "stream_line_dedup",
-    oracle=None,  # replaced below: built from llm_ops' line-dedup constants
+    oracle=_line_dedup_oracle,
     doc="Streaming twin of line_dedup_corpus: the keep-first line registry "
     "as a continuous aggregation — each arriving document explodes into "
     "its fixed-width lines and a streaming groupBy per line text keeps "
@@ -873,43 +878,46 @@ def stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_line_dedup_oracle() -> None:
-    """stream_line_dedup's registry shape (repeated lines only) is its own
-    projection, not the batch per-doc rebuild — derive its oracle from the
-    same llm_ops constants so batch and stream can never drift apart."""
+def _stream_lm_oracle() -> str:
+    """Derive stream_lm_perplexity's oracle from the batch query's CTE
+    builders (scores only, no tercile) so the two can never drift."""
     from streamprocessors_spark.functions import dialect as D
     from streamprocessors_spark.functions.dialect import DUCK
     from streamprocessors_spark.plans.llm_ops import (
-        LINE_SEG_SPAN,
-        LINE_SEG_W,
+        LM_TRAIN_MOD,
+        _LM_SURPRISAL_DUCK,
     )
-    from streamprocessors_spark.plans.registry import REGISTRY
 
-    REGISTRY["stream_line_dedup"].oracle = f"""
+    return f"""
     WITH w AS (SELECT doc_id, {D.words(DUCK)} AS ws FROM documents),
-    w2 AS (SELECT doc_id, ws FROM w WHERE len(ws) > 0),
-    s AS (SELECT array_to_string(
-                   ws[(i*{LINE_SEG_W}+1):(i*{LINE_SEG_W}+{LINE_SEG_W})],
-                   ' ') AS seg,
-                 doc_id * {LINE_SEG_SPAN} + i AS pk
-          FROM w2, unnest(range(0, (len(ws) + {LINE_SEG_W - 1})
-                                   // {LINE_SEG_W})) AS t(i)),
-    a AS (SELECT seg, min(pk) AS mpk, CAST(count(*) AS BIGINT) AS n_occ
-          FROM s GROUP BY seg)
-    SELECT seg,
-           CAST(mpk // {LINE_SEG_SPAN} AS BIGINT) AS first_doc,
-           CAST(mpk % {LINE_SEG_SPAN} AS BIGINT) AS first_sidx,
-           n_occ
-    FROM a WHERE n_occ >= 2
+    tr AS (SELECT doc_id, ws FROM w
+           WHERE doc_id % {LM_TRAIN_MOD} = 0 AND len(ws) >= 2),
+    trp AS (SELECT ws[i] AS w1, ws[i+1] AS w2
+            FROM tr, unnest(range(1, len(ws))) AS t(i)),
+    big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
+            FROM trp GROUP BY w1, w2),
+    hist AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1
+             FROM trp GROUP BY w1),
+    vs AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS v
+           FROM (SELECT unnest(ws) AS u
+                 FROM w WHERE doc_id % {LM_TRAIN_MOD} = 0)),
+    sc AS (SELECT doc_id, ws FROM w
+           WHERE doc_id % {LM_TRAIN_MOD} <> 0 AND len(ws) >= 2),
+    scp AS (SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2
+            FROM sc, unnest(range(1, len(ws))) AS t(i)),
+    pq AS (SELECT p.doc_id, {_LM_SURPRISAL_DUCK} AS sq
+           FROM scp p CROSS JOIN vs
+           LEFT JOIN big b ON b.w1 = p.w1 AND b.w2 = p.w2
+           LEFT JOIN hist h ON h.w1 = p.w1)
+    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
+           CAST(CAST(sum(sq) AS BIGINT) // count(*) AS BIGINT) AS ce_q
+    FROM pq GROUP BY doc_id
     """
-
-
-_wire_line_dedup_oracle()
 
 
 @register(
     "stream_lm_perplexity",
-    oracle=None,  # replaced below: the batch CTEs minus the tercile rank
+    oracle=_stream_lm_oracle,
     doc="Streaming twin of lm_perplexity_bucket's scoring pass: the "
     "bigram LM trained BATCH-side on the clean slice scores arriving "
     "documents through stream-static equi-joins (the deployment shape — "
@@ -960,50 +968,9 @@ def stream_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_lm_oracle() -> None:
-    """Derive stream_lm_perplexity's oracle from the batch query's CTE
-    builders (scores only, no tercile) so the two can never drift."""
-    from streamprocessors_spark.functions import dialect as D
-    from streamprocessors_spark.functions.dialect import DUCK
-    from streamprocessors_spark.plans.llm_ops import (
-        LM_TRAIN_MOD,
-        _LM_SURPRISAL_DUCK,
-    )
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    REGISTRY["stream_lm_perplexity"].oracle = f"""
-    WITH w AS (SELECT doc_id, {D.words(DUCK)} AS ws FROM documents),
-    tr AS (SELECT doc_id, ws FROM w
-           WHERE doc_id % {LM_TRAIN_MOD} = 0 AND len(ws) >= 2),
-    trp AS (SELECT ws[i] AS w1, ws[i+1] AS w2
-            FROM tr, unnest(range(1, len(ws))) AS t(i)),
-    big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
-            FROM trp GROUP BY w1, w2),
-    hist AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1
-             FROM trp GROUP BY w1),
-    vs AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS v
-           FROM (SELECT unnest(ws) AS u
-                 FROM w WHERE doc_id % {LM_TRAIN_MOD} = 0)),
-    sc AS (SELECT doc_id, ws FROM w
-           WHERE doc_id % {LM_TRAIN_MOD} <> 0 AND len(ws) >= 2),
-    scp AS (SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2
-            FROM sc, unnest(range(1, len(ws))) AS t(i)),
-    pq AS (SELECT p.doc_id, {_LM_SURPRISAL_DUCK} AS sq
-           FROM scp p CROSS JOIN vs
-           LEFT JOIN big b ON b.w1 = p.w1 AND b.w2 = p.w2
-           LEFT JOIN hist h ON h.w1 = p.w1)
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(CAST(sum(sq) AS BIGINT) // count(*) AS BIGINT) AS ce_q
-    FROM pq GROUP BY doc_id
-    """
-
-
-_wire_stream_lm_oracle()
-
-
 @register(
     "stream_corpus_prep",
-    oracle=None,  # wired below: shares corpus_prep_pipeline's batch oracle
+    oracle=lambda: REGISTRY["corpus_prep_pipeline"].oracle,
     doc="Streaming twin of the COMPOSED corpus_prep_pipeline — the "
     "production deployment of the family: arriving shards flow through "
     "the stateless quality filter (fused into the scan of each "
@@ -1068,20 +1035,9 @@ def stream_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_corpus_prep_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("corpus_prep_pipeline")
-    if batch is not None:
-        REGISTRY["stream_corpus_prep"].oracle = batch.oracle
-
-
-_wire_corpus_prep_oracle()
-
-
 @register(
     "stream_kneser_ney",
-    oracle=None,  # wired below: shares lm_kneser_ney_score's oracle
+    oracle=lambda: REGISTRY["lm_kneser_ney_score"].oracle,
     doc="Streaming twin of lm_kneser_ney_score (the arriving-crawl-"
     "shard scoring deployment): the Kneser-Ney model tables (bigram "
     "counts, left-token histogram + continuation-fanout, right-token "
@@ -1138,20 +1094,9 @@ def stream_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_kn_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("lm_kneser_ney_score")
-    if batch is not None:
-        REGISTRY["stream_kneser_ney"].oracle = batch.oracle
-
-
-_wire_stream_kn_oracle()
-
-
 @register(
     "stream_text_entropy",
-    oracle=None,  # wired below: shares text_entropy_score's oracle
+    oracle=lambda: REGISTRY["text_entropy_score"].oracle,
     doc="Streaming twin of text_entropy_score: the corpus-scale work — "
     "the per-(doc, word) occurrence counts — runs as the streaming "
     "aggregation (state-store keyed by doc and word), and the per-doc "
@@ -1190,17 +1135,6 @@ def stream_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             " as bigint) as ent_num_q",
         )
     )
-
-
-def _wire_stream_entropy_oracle() -> None:
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("text_entropy_score")
-    if batch is not None:
-        REGISTRY["stream_text_entropy"].oracle = batch.oracle
-
-
-_wire_stream_entropy_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1390,7 +1324,7 @@ def _incremental_keep_list_labels(
 
 @register(
     "stream_dedup_keep_list",
-    oracle=None,  # wired below: shares dedup_keep_list's oracle
+    oracle=lambda: REGISTRY["dedup_keep_list"].oracle,
     doc="Streaming keep-list maintenance — the online twin of "
     "dedup_keep_list and the production cascade's serving shape: as "
     "shards arrive, band-bucket membership lives in keyed state "
@@ -1444,21 +1378,9 @@ def stream_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_keep_list_oracle() -> None:
-    import streamprocessors_spark.plans.advanced  # noqa: F401
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("dedup_keep_list")
-    if batch is not None:
-        REGISTRY["stream_dedup_keep_list"].oracle = batch.oracle
-
-
-_wire_stream_keep_list_oracle()
-
-
 @register(
     "stream_html_extract",
-    oracle=None,  # wired below: shares html_extract_main_text's oracle
+    oracle=lambda: REGISTRY["html_extract_main_text"].oracle,
     doc="Streaming twin of html_extract_main_text — extraction at INGEST, "
     "where every production crawl pipeline runs it (the WET stage is "
     "applied per fetched page, not as a batch pass). Pure stateless "
@@ -1493,18 +1415,6 @@ def stream_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_available_now(ex, output_mode="append")
-
-
-def _wire_stream_html_oracle() -> None:
-    import streamprocessors_spark.plans.llm_ops  # noqa: F401
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("html_extract_main_text")
-    if batch is not None:
-        REGISTRY["stream_html_extract"].oracle = batch.oracle
-
-
-_wire_stream_html_oracle()
 
 
 def _packer_schema(cols: list[str]) -> str:
@@ -1830,7 +1740,7 @@ def ingest_packed_lineage_bins(
 
 @register(
     "stream_tokenized_packing",
-    oracle=None,  # wired below: shares tokenized_context_packing's oracle
+    oracle=lambda: REGISTRY["tokenized_context_packing"].oracle,
     doc="Streaming twin of tokenized_context_packing — pack AT INGEST, "
     "the final pipeline stage run continuously: the BPE encoding table "
     "is batch-trained on the existing corpus (the memoized trained-"
@@ -1858,21 +1768,9 @@ def stream_tokenized_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ingest_packed_bins(stream_documents(spark, sf_dir), seq)
 
 
-def _wire_stream_packing_oracle() -> None:
-    import streamprocessors_spark.plans.llm_ops  # noqa: F401
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("tokenized_context_packing")
-    if batch is not None:
-        REGISTRY["stream_tokenized_packing"].oracle = batch.oracle
-
-
-_wire_stream_packing_oracle()
-
-
 @register(
     "stream_packed_lineage",
-    oracle=None,  # wired below: shares packed_lineage_bins' oracle
+    oracle=lambda: REGISTRY["packed_lineage_bins"].oracle,
     doc="Streaming twin of packed_lineage_bins — provenance-threaded "
     "packing AT INGEST: arriving shards pass the scan-local Gopher keep "
     "filter, survivors are tokenized/positioned against the batch-"
@@ -1899,21 +1797,9 @@ def stream_packed_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wire_stream_lineage_oracle() -> None:
-    import streamprocessors_spark.plans.llm_ops  # noqa: F401
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("packed_lineage_bins")
-    if batch is not None:
-        REGISTRY["stream_packed_lineage"].oracle = batch.oracle
-
-
-_wire_stream_lineage_oracle()
-
-
 @register(
     "stream_snapshot_delta",
-    oracle=None,  # wired below: shares snapshot_delta_report's oracle
+    oracle=lambda: REGISTRY["snapshot_delta_report"].oracle,
     doc="CDC at ingest — the streaming twin of snapshot_delta_report: "
     "the NEW snapshot arrives as a stream, each micro-batch classifies "
     "its documents against the PERSISTED previous-snapshot content-hash "
@@ -2078,21 +1964,9 @@ def cdc_drain(spark: SparkSession, store: DataFrame, workdir: str) -> DataFrame:
     return out.localCheckpoint()
 
 
-def _wire_stream_snapshot_oracle() -> None:
-    import streamprocessors_spark.plans.data_quality  # noqa: F401
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("snapshot_delta_report")
-    if batch is not None:
-        REGISTRY["stream_snapshot_delta"].oracle = batch.oracle
-
-
-_wire_stream_snapshot_oracle()
-
-
 @register(
     "stream_quality_signals",
-    oracle=None,  # wired below: shares quality_signals_table's oracle
+    oracle=lambda: REGISTRY["quality_signals_table"].oracle,
     doc="Streaming twin of quality_signals_table: the wide per-document "
     "signal battery computed AT INGEST — the RedPajama-V2-style signal "
     "table materialized continuously as crawl shards land, so every "
@@ -2108,15 +1982,3 @@ def stream_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         signals_docs(stream_documents(spark, sf_dir)), output_mode="append"
     )
-
-
-def _wire_stream_signals_oracle() -> None:
-    import streamprocessors_spark.plans.data_quality  # noqa: F401
-    from streamprocessors_spark.plans.registry import REGISTRY
-
-    batch = REGISTRY.get("quality_signals_table")
-    if batch is not None:
-        REGISTRY["stream_quality_signals"].oracle = batch.oracle
-
-
-_wire_stream_signals_oracle()

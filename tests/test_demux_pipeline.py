@@ -187,6 +187,56 @@ def test_complete_tables_r6(spark):
     assert bytes(t.sections[1].section_bytes) == s1
 
 
+def test_latest_sections_waits_for_a_complete_version(spark):
+    """R6/R7: while a 2-section SDT is changing version, the register
+    keeps the last complete version. v1 sections 0 and 1 arrive, then v2
+    section 0 only: every latest row is v1, and sdt_services reads v1's
+    two services, never a mix of v2 section 0 and v1 section 1."""
+    from streamprocessors_spark.codec.psi import (
+        PSI_PID_SDT,
+        PSI_TABLE_ID_SDT,
+        encode_section,
+        encode_service_descriptor,
+        sectionize,
+    )
+    from streamprocessors_spark.operators.demux import (
+        latest_sections,
+        reassemble_sections,
+        sdt_services,
+    )
+    from streamprocessors_spark.sources import packets_from_binary_column
+
+    def sdt_section(num: int, version: int, service_id: int, name: str) -> bytes:
+        desc = encode_service_descriptor(1, "prov", name)
+        body = bytes([0, 1, 0xFF])  # original_network_id 1
+        body += bytes(
+            [service_id >> 8, service_id & 0xFF, 0xFC, (4 << 5) | (len(desc) >> 8), len(desc) & 0xFF]
+        ) + desc
+        return encode_section(
+            table_id=PSI_TABLE_ID_SDT, table_id_ext=7, version=version,
+            section_number=num, last_section_number=1, payload=body,
+        )
+
+    arrivals = [
+        sdt_section(0, 1, 101, "one-v1"),
+        sdt_section(1, 1, 102, "two-v1"),
+        sdt_section(0, 2, 101, "one-v2"),
+    ]
+    buf = b"".join(
+        b"".join(sectionize(sec, pid=PSI_PID_SDT, start_cc=i * 4))
+        for i, sec in enumerate(arrivals)
+    )
+    raw = spark.createDataFrame([("s", buf)], "stream_id STRING, value BINARY")
+    sections = reassemble_sections(packets_from_binary_column(raw))
+    latest = latest_sections(sections).collect()
+    assert sorted((r.section_number, r.version) for r in latest) == [(0, 1), (1, 1)]
+    services = sdt_services(sections).orderBy("service_id").collect()
+    assert [(r.service_id, r.service_name) for r in services] == [
+        (101, "one-v1"),
+        (102, "two-v1"),
+    ]
+
+
 def test_psi_payload_edge_cases(spark):
     """Payload corner cases of the decode made during reassembly. The
     expected rows come from the codec's parse_section of the same bytes:
