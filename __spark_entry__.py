@@ -45,9 +45,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL for every SQL-expressible query."""
-    return {
-        name: q.oracle
-        for name, q in plans.ordered_registry().items()
-        if q.oracle is not None
-    }
+    """DuckDB-runnable oracle SQL for every query, in ``queries()`` order
+    (``register()`` refuses a query without one)."""
+    return {name: q.oracle for name, q in plans.ordered_registry().items()}

@@ -39,7 +39,7 @@ def parse_ts_buffer_np(buf: bytes) -> dict[str, np.ndarray]:
     logs-and-drops the residual, mpeg2ts/src/mpeg2_sp.c:1377-1382).
 
     This is the P1+P2 fast path: pure columnar bit ops, no per-packet
-    Python, suitable for Arrow-batched ``mapInPandas``.
+    Python, suitable for Arrow-batched ``mapInArrow``.
     """
     n = len(buf) // TS_PKT_SIZE
     a = np.frombuffer(buf, dtype=np.uint8, count=n * TS_PKT_SIZE).reshape(

@@ -7,17 +7,24 @@ segment, so a 100 TB capture parallelizes across the cluster by file);
 ``packets_from_binary_column`` covers the datagram shape (any DataFrame
 with a binary column, 1 row = 1 datagram/segment).
 
-Parsing is the vectorized numpy path (codec.ts.parse_ts_buffer_np) inside
-``mapInPandas`` — Arrow-batched, no per-packet Python.
+Slicing and parsing run inside ``mapInArrow``, one pass per Arrow batch:
+every row's whole packets are fused into one buffer (a zero-copy view of
+the batch's binary values when no row carries partial bytes), one
+vectorized ``codec.ts.parse_ts_buffer_np`` call parses them all,
+``stream_id`` is a ``take`` of the row ids and ``raw`` is a zero-copy
+binary array over the fused buffer — no per-row or per-packet Python.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -50,82 +57,46 @@ PACKET_SCHEMA = StructType(
     ]
 )
 
+# the columns parse_ts_buffer_np fills, with their Arrow types
+_PARSED = {f.name: to_arrow_type(f.dataType) for f in PACKET_SCHEMA.fields[1:-1]}
 
-def _slice_batch(
-    stream_ids: pd.Series,
-    blobs: pd.Series,
-    keep_raw: bool,
-    base_indices: pd.Series | None = None,
-) -> pd.DataFrame:
-    frames = []
-    bases = base_indices if base_indices is not None else [0] * len(blobs)
 
-    # Fast path: every row is exactly one packet (the datagram/row shape).
-    # One numpy parse over the fused batch instead of one call per row —
-    # per-call numpy overhead dominates 188-byte buffers by ~100x.
-    if len(blobs) > 1 and all(
-        b is not None and len(b) == TS_PKT_SIZE for b in blobs
-    ):
-        import numpy as np
+def _slice_arrow(batch: pa.RecordBatch, keep_raw: bool) -> pa.RecordBatch:
+    """One Arrow batch of (id, bytes[, base]) rows -> its packet rows.
 
-        cols = parse_ts_buffer_np(b"".join(bytes(b) for b in blobs))
-        df = pd.DataFrame(
-            {
-                "stream_id": list(stream_ids),
-                "pkt_index": np.asarray(list(bases), dtype="int64"),
-                "sync_ok": cols["sync_ok"],
-                "tei": cols["tei"].astype("int32"),
-                "pusi": cols["pusi"].astype("int32"),
-                "pid": cols["pid"].astype("int32"),
-                "scrambling": cols["scrambling"].astype("int32"),
-                "afc": cols["afc"].astype("int32"),
-                "cc": cols["cc"].astype("int32"),
-                "af_len": cols["af_len"].astype("int32"),
-                "discontinuity": cols["discontinuity"].astype("int32"),
-                "random_access": cols["random_access"].astype("int32"),
-                "pcr": cols["pcr"],
-                "payload_len": cols["payload_len"].astype("int32"),
-            }
-        )
-        df["raw"] = [bytes(b) for b in blobs] if keep_raw else None
-        return df
-
-    for sid, blob, base in zip(stream_ids, blobs, bases):
-        if blob is None or len(blob) < TS_PKT_SIZE:
-            continue
-        cols = parse_ts_buffer_np(bytes(blob))
-        if base:
-            cols["pkt_index"] = cols["pkt_index"] + int(base)
-        n = len(cols["pid"])
-        df = pd.DataFrame(
-            {
-                "stream_id": sid,
-                "pkt_index": cols["pkt_index"],
-                "sync_ok": cols["sync_ok"],
-                "tei": cols["tei"].astype("int32"),
-                "pusi": cols["pusi"].astype("int32"),
-                "pid": cols["pid"].astype("int32"),
-                "scrambling": cols["scrambling"].astype("int32"),
-                "afc": cols["afc"].astype("int32"),
-                "cc": cols["cc"].astype("int32"),
-                "af_len": cols["af_len"].astype("int32"),
-                "discontinuity": cols["discontinuity"].astype("int32"),
-                "random_access": cols["random_access"].astype("int32"),
-                "pcr": cols["pcr"],
-                "payload_len": cols["payload_len"].astype("int32"),
-            }
-        )
-        if keep_raw:
-            b = bytes(blob)
-            df["raw"] = [
-                b[i * TS_PKT_SIZE : (i + 1) * TS_PKT_SIZE] for i in range(n)
-            ]
-        else:
-            df["raw"] = None
-        frames.append(df)
-    if not frames:
-        return pd.DataFrame({f.name: pd.Series(dtype="object") for f in PACKET_SCHEMA})
-    return pd.concat(frames, ignore_index=True)
+    Every row's whole packets are fused into one buffer (zero-copy when no
+    row carries trailing partial bytes) and parsed by a single
+    ``parse_ts_buffer_np`` call; ``raw`` is a binary array over that same
+    buffer. Null rows and rows shorter than a packet give nothing.
+    """
+    ids, blobs = batch.column(0), batch.column(1)
+    nrows = len(blobs)
+    width = np.int64 if pa.types.is_large_binary(blobs.type) else np.int32
+    offs = np.frombuffer(blobs.buffers()[1], dtype=width)[
+        blobs.offset : blobs.offset + nrows + 1
+    ].astype(np.int64)
+    lens = np.diff(offs)
+    null = blobs.is_null().to_numpy(zero_copy_only=False)
+    counts = np.where(null, 0, lens // TS_PKT_SIZE)
+    kept = counts * TS_PKT_SIZE
+    span = np.frombuffer(blobs.buffers()[2] or b"", dtype=np.uint8)[offs[0] : offs[-1]]
+    if (lens != kept).any():  # drop trailing partial bytes and null rows
+        keep = np.resize(np.array([True, False]), 2 * nrows)
+        span = span[np.repeat(keep, np.column_stack([kept, lens - kept]).ravel())]
+    cols = parse_ts_buffer_np(span)
+    n = len(cols["pid"])
+    row = np.repeat(np.arange(nrows), counts)
+    cols["pkt_index"] -= np.repeat(np.cumsum(counts) - counts, counts)
+    if batch.num_columns > 2:
+        cols["pkt_index"] += pc.fill_null(batch.column(2), 0).to_numpy()[row]
+    raw_offsets = pa.py_buffer(np.arange(n + 1, dtype=width) * TS_PKT_SIZE)
+    raw = pa.Array.from_buffers(blobs.type, n, [None, raw_offsets, pa.py_buffer(span)])
+    return pa.RecordBatch.from_arrays(
+        [ids.take(pa.array(row))]
+        + [pa.array(cols[c], type=t) for c, t in _PARSED.items()]
+        + [raw if keep_raw else pa.nulls(n, blobs.type)],
+        names=PACKET_SCHEMA.fieldNames(),
+    )
 
 
 def packets_from_binary_column(
@@ -146,14 +117,9 @@ def packets_from_binary_column(
     quadratic in stream length).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _slice_batch(
-                pdf[id_col],
-                pdf[bytes_col],
-                keep_raw,
-                pdf[index_col] if index_col else None,
-            )
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _slice_arrow(batch, keep_raw)
 
     cols = [
         F.col(id_col).cast("string").alias(id_col),
@@ -161,7 +127,7 @@ def packets_from_binary_column(
     ]
     if index_col:
         cols.append(F.col(index_col).cast("long").alias(index_col))
-    return df.select(*cols).mapInPandas(gen, schema=PACKET_SCHEMA)
+    return df.select(*cols).mapInArrow(gen, schema=PACKET_SCHEMA)
 
 
 def read_ts_files(

@@ -1,14 +1,20 @@
 """Keyed-state streaming operators (R1/R6 reassembly, P6 continuity).
 
-Both operators run under ``applyInPandasWithState`` with the grouping key
-(stream_id, pid) — the same key as the batch shuffle, mirroring the
-reference's per-PID FIFO/processor fan-out (psi_proc.c:228-256). State is
-tiny and bounded: the continuity check keeps (last_cc, counters); the
-reassembler keeps at most one partial section buffer (≤4 KB,
-psi.h:82-83). A 1000-executor cluster holds state for millions of
-(stream, pid) keys without pressure.
+Both operators keep their state per (stream_id, pid) — the same key as
+the batch shuffle, mirroring the reference's per-PID FIFO/processor
+fan-out (psi_proc.c:228-256) — but ``applyInPandasWithState`` groups on a
+key *shard*, ``pmod(xxhash64(stream_id, pid), KEY_SHARDS)``. One Python
+call per shard and micro-batch then serves every key that hashes to it,
+instead of one call per PID, and the shard's state row is a pickled dict
+of its keys' entries. ``KEY_SHARDS`` (16) is a fixed constant: a restart
+from a checkpoint must map each key to the same shard. Per-key state is
+tiny and bounded: the continuity check keeps last_cc; the reassembler
+keeps at most one partial section buffer (≤4 KB, psi.h:82-83). A
+micro-batch rewrites the state of the shards it touches, so its state
+writes scale with their keys. The per-shard steps (``cc_shard_step``,
+``section_shard_step``) are plain functions, testable without Spark.
 
-Ordering (T1): within a micro-batch the group's rows are sorted by packet
+Ordering (T1): within a micro-batch each key's rows are sorted by packet
 position before feeding state; across batches the file-stream source
 delivers segments in order. Out-of-order arrival is flagged (CC error),
 never reordered — the reference's rule (ts_dec.c:98-108).
@@ -20,14 +26,16 @@ the stream_* driver queries share oracles with their batch twins).
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+import pickle
+from functools import partial
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     IntegerType,
     LongType,
     StringType,
@@ -35,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from streamprocessors_spark.codec.psi import SectionReassembler
+from streamprocessors_spark.codec.ts import check_cc
 from streamprocessors_spark.operators.demux import SECTION_SCHEMA, section_row
 
 CC_OUTPUT_SCHEMA = StructType(
@@ -46,8 +56,117 @@ CC_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# last continuity counter seen for the key (-1 = none yet)
-CC_STATE_SCHEMA = StructType([StructField("last_cc", IntegerType())])
+# One state row per shard: a pickled dict of the shard's entries (the
+# per-(stream, pid) machines here, the LSH and gram bucket stores below).
+SHARD_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
+
+# State-shard count for the per-(stream, pid) machines. Fixed, never
+# derived from the session: a restart from a checkpoint must map every
+# key to the shard that holds its state.
+KEY_SHARDS = 16
+
+_KEY = ["stream_id", "pid"]
+
+
+def key_shard() -> Column:
+    """The state shard of a packet row's (stream_id, pid) key."""
+    return F.pmod(F.xxhash64(*_KEY), F.lit(KEY_SHARDS)).cast("int")
+
+
+def _runs(pdf: pd.DataFrame) -> Iterator[tuple[tuple[str, int], pd.DataFrame]]:
+    """One run of ``pdf`` per (stream_id, pid), each in packet order (T1)."""
+    pdf = pdf.sort_values([*_KEY, "pkt_index"], kind="stable")
+    for (sid, pid), run in pdf.groupby(_KEY, sort=False, dropna=False):
+        yield (sid, int(pid)), run
+
+
+def cc_shard_step(held: dict, pdf: pd.DataFrame, now_ms: int) -> tuple[dict, list]:
+    """P6 continuity check over one shard's packets, by ``codec.ts.check_cc``:
+    ``held`` maps each (stream_id, pid) to its last CC. One (stream_id,
+    pid, n_packets, cc_errors) row per key in ``pdf``. ``now_ms`` is
+    unused: the shard-step signature carries it, and CC has no idle rule."""
+    rows = []
+    for key, run in _runs(pdf):
+        last_cc = held.get(key)
+        errs = 0
+        cols = (run[c].tolist() for c in ("cc", "afc", "discontinuity"))
+        for cc, afc, disc in zip(*cols):
+            errs += not check_cc(last_cc, cc, afc & 1, disc)
+            last_cc = cc
+        held[key] = last_cc
+        rows.append((*key, len(run), errs))
+    return held, rows
+
+
+def section_shard_step(
+    held: dict, pdf: pd.DataFrame, now_ms: int, idle_timeout_ms: int | None = None
+) -> tuple[dict, list]:
+    """R1-R5 over one shard's packets: ``held`` maps each (stream_id, pid)
+    to its reassembler carry-over ``(buf, synced, last_seen_ms)``. An
+    entry last seen more than ``idle_timeout_ms`` before ``now_ms`` is
+    dropped before any packet is pushed (T2 abandonment, per key)."""
+    if idle_timeout_ms is not None:
+        held = {k: v for k, v in held.items() if now_ms - v[2] <= idle_timeout_ms}
+    rows = []
+    for key, run in _runs(pdf):
+        r = SectionReassembler()
+        if key in held:
+            buf, r.synced, _ = held[key]
+            r.buf = bytearray(buf)
+        for raw in run["raw"]:
+            if raw is None:
+                continue
+            for sec in r.push(bytes(raw)):
+                row = section_row(sec)
+                if row is not None:
+                    rows.append(key + row)
+        held[key] = (bytes(r.buf), r.synced, now_ms)
+    return held, rows
+
+
+def _sharded(
+    df: DataFrame,
+    shard: Column,
+    step: Callable[[dict, pd.DataFrame, int], tuple[dict, list]],
+    output: StructType,
+    idle_timeout_ms: int | None = None,
+) -> DataFrame:
+    """Run ``step(held, pdf, now_ms) -> (held, rows)`` once per ``shard``
+    value and micro-batch; ``held`` is the shard's dict, carried in one
+    pickled state row (SHARD_STATE_SCHEMA)."""
+
+    def f(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()  # every entry of the shard is idle
+            return
+        held = pickle.loads(state.get[0]) if state.exists else {}
+        # Concatenate the Arrow chunks BEFORE the step sorts: chunk
+        # boundaries are a batching artifact with no ordering contract, so
+        # a section split across chunks would otherwise feed state out of
+        # order. Memory stays bounded by the micro-batch (cap via
+        # maxFilesPerTrigger / maxBytesPerTrigger at ingest).
+        held, rows = step(
+            held, pd.concat(list(pdfs), ignore_index=True),
+            state.getCurrentProcessingTimeMs(),
+        )
+        state.update((pickle.dumps(held, protocol=4),))
+        if idle_timeout_ms is not None:
+            state.setTimeoutDuration(idle_timeout_ms)
+        yield pd.DataFrame(rows, columns=output.fieldNames())
+
+    return df.withColumn("shard", shard).groupBy("shard").applyInPandasWithState(
+        f,
+        outputStructType=output,
+        stateStructType=SHARD_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if idle_timeout_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
+    )
 
 
 def cc_state_stream(packets: DataFrame) -> DataFrame:
@@ -55,60 +174,15 @@ def cc_state_stream(packets: DataFrame) -> DataFrame:
 
     Emits one (n_packets, cc_errors) delta row per key per micro-batch;
     summing the emissions gives totals identical to the batch lag-window
-    version (pid_packet_stats). Packets with no payload don't increment
-    the expected CC (ts_dec.c:148-171 duplicate rule's non-incrementing
-    case); an AF discontinuity flag excuses a gap (ts_dec.c:126-146).
+    version (pid_packet_stats). See ``cc_shard_step``.
     """
-
-    def f(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (last_cc,) = state.get if state.exists else (-1,)
-        n = 0
-        errs = 0
-        # Concatenate the group's Arrow chunks BEFORE sorting: per-chunk
-        # sort_values only orders within a chunk, and chunk boundaries are
-        # an Arrow batching artifact with no ordering contract — a section
-        # split across chunks would otherwise feed state out of order.
-        # Memory stays bounded by the micro-batch (cap via
-        # maxFilesPerTrigger / maxBytesPerTrigger at ingest).
-        allpdf = pd.concat(list(pdfs), ignore_index=True)
-        for pdf in [allpdf.sort_values("pkt_index")]:
-            for cc, afc, disc in zip(pdf["cc"], pdf["afc"], pdf["discontinuity"]):
-                has_payload = int(afc) & 1
-                if last_cc >= 0 and not disc:
-                    expected = (last_cc + has_payload) % 16
-                    if int(cc) != expected:
-                        errs += 1
-                last_cc = int(cc)
-                n += 1
-        state.update((last_cc,))
-        yield pd.DataFrame(
-            [(key[0], int(key[1]), n, errs)],
-            columns=[f.name for f in CC_OUTPUT_SCHEMA],
-        )
-
-    return packets.groupBy("stream_id", "pid").applyInPandasWithState(
-        f,
-        outputStructType=CC_OUTPUT_SCHEMA,
-        stateStructType=CC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _sharded(packets, key_shard(), cc_shard_step, CC_OUTPUT_SCHEMA)
 
 
 # The batch row minus its two batch-position columns: a stream has no
 # global packet order to number sections by.
 SECTION_STREAM_SCHEMA = StructType(
     [f for f in SECTION_SCHEMA if f.name not in ("section_index", "first_pkt_index")]
-)
-
-# partial-section carryover: reassembler buffer + sync flag (R1 state)
-SECTION_STATE_SCHEMA = StructType(
-    [
-        StructField("buf", BinaryType()),
-        StructField("synced", BooleanType()),
-    ]
 )
 
 
@@ -130,7 +204,9 @@ def section_reassembly_stream(
     partial buffer and frees its state — the reference's "section could
     not be completed" rule (psi_dec.c:271-293, psi_table_dec.c:160-166)
     applied on the time axis. Without it a continuous ingest leaks ≤4 KB
-    per dead (stream, pid) key forever.
+    per dead (stream, pid) key forever. The shard drops such keys on its
+    next call, and a shard whose keys are all idle times out and frees
+    its state row.
 
     Only pass ``idle_timeout_ms`` for continuously-triggered queries:
     with a processing-time timeout every micro-batch schedules a
@@ -138,50 +214,8 @@ def section_reassembly_stream(
     never terminates. Batch-parity runs (the oracle gate) use the
     default ``None``.
     """
-    from streamprocessors_spark.codec.psi import SectionReassembler
-
-    def f(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle key: drop the partial buffer, free the state slot
-            state.remove()
-            yield pd.DataFrame([], columns=SECTION_STREAM_SCHEMA.fieldNames())
-            return
-        r = SectionReassembler()
-        if state.exists:
-            buf, synced = state.get
-            r.buf = bytearray(buf or b"")
-            r.synced = bool(synced)
-        stream_id, pid = key[0], int(key[1])
-        # Same cross-chunk ordering rule as cc_state_stream above: one
-        # concat+sort per group per micro-batch.
-        allpdf = pd.concat(list(pdfs), ignore_index=True)
-        for pdf in [allpdf.sort_values("pkt_index")]:
-            rows: list[tuple[Any, ...]] = []
-            for raw in pdf["raw"]:
-                if raw is None:
-                    continue
-                for sec in r.push(bytes(raw)):
-                    row = section_row(sec)
-                    if row is not None:
-                        rows.append((stream_id, pid) + row)
-            yield pd.DataFrame(rows, columns=SECTION_STREAM_SCHEMA.fieldNames())
-        state.update((bytes(r.buf), bool(r.synced)))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-
-    return packets.groupBy("stream_id", "pid").applyInPandasWithState(
-        f,
-        outputStructType=SECTION_STREAM_SCHEMA,
-        stateStructType=SECTION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if idle_timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
-    )
+    step = partial(section_shard_step, idle_timeout_ms=idle_timeout_ms)
+    return _sharded(packets, key_shard(), step, SECTION_STREAM_SCHEMA, idle_timeout_ms)
 
 
 # ---------------------------------------------------------------------------
@@ -198,13 +232,12 @@ LSH_PAIR_SCHEMA = StructType(
     ]
 )
 
-# Bucket membership, bucketed like GRAM_BUCKET_STATE_SCHEMA below: one
-# pickled dict per state-shard group, (band, bh) -> (members, n).
-# Per-bucket entries stay bounded (<= max_bucket member ids, then freed —
-# a saturated bucket keeps ONLY the counter, O(1) for boilerplate
-# buckets); the shard dict holds the buckets that hash to it.
-LSH_BUCKET_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
-
+# Bucket membership, one SHARD_STATE_SCHEMA dict per state shard:
+# (band, bh) -> (members, n). Per-bucket entries stay bounded
+# (<= max_bucket member ids, then freed — a saturated bucket keeps ONLY
+# the counter, O(1) for boilerplate buckets); the shard dict holds the
+# buckets that hash to it.
+#
 # State-shard count: the group key is pmod(xxhash64(band, bh), B), so one
 # applyInPandasWithState group (= one Python call + one Arrow round-trip
 # + one state-store row per micro-batch) serves ~#buckets/B LSH buckets
@@ -252,20 +285,14 @@ def lsh_bucket_pairs_stream(
     idempotent.
     """
 
-    import pickle
-
-    from pyspark.sql import functions as F
-
-    def f(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        held: dict[tuple[int, int], tuple[list[int], int]] = (
-            pickle.loads(state.get[0]) if state.exists else {}
-        )
+    def step(
+        held: dict[tuple[int, int], tuple[list[int], int]],
+        pdf: pd.DataFrame,
+        now_ms: int,
+    ) -> tuple[dict, list[tuple[int, int]]]:
         arrivals: dict[tuple[int, int], set[int]] = {}
-        for pdf in pdfs:
-            for b, bh, d in zip(pdf["band"], pdf["bh"], pdf["doc_id"]):
-                arrivals.setdefault((int(b), int(bh)), set()).add(int(d))
+        for b, bh, d in zip(pdf["band"], pdf["bh"], pdf["doc_id"]):
+            arrivals.setdefault((int(b), int(bh)), set()).add(int(d))
         rows: list[tuple[int, int]] = []
         for bk in sorted(arrivals):
             members, n = held.get(bk, ([], 0))
@@ -281,19 +308,10 @@ def lsh_bucket_pairs_stream(
                     # saturated: free the list, keep the counter
                     members = []
             held[bk] = (members, n)
-        state.update((pickle.dumps(held, protocol=4),))
-        yield pd.DataFrame(rows, columns=["doc_a", "doc_b"])
+        return held, rows
 
-    sharded = bands.withColumn(
-        "gb", F.pmod(F.xxhash64("band", "bh"), F.lit(n_shards)).cast("int")
-    )
-    return sharded.groupBy("gb").applyInPandasWithState(
-        f,
-        outputStructType=LSH_PAIR_SCHEMA,
-        stateStructType=LSH_BUCKET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    shard = F.pmod(F.xxhash64("band", "bh"), F.lit(n_shards)).cast("int")
+    return _sharded(bands, shard, step, LSH_PAIR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -321,10 +339,8 @@ GRAM_POS_SCHEMA = StructType(
     ]
 )
 
-# One pickled dict per bucket: gh -> (first_doc, first_pos, n).
+# One SHARD_STATE_SCHEMA dict per bucket: gh -> (first_doc, first_pos, n).
 # first_doc = -1 once the held-back position has been emitted.
-GRAM_BUCKET_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
-
 GRAM_STATE_BUCKETS = 1024
 
 
@@ -340,22 +356,13 @@ def gram_repeat_positions_stream(
     singleton grams hold their entry forever, which at production scale
     is where a TTL/state-store compaction policy would attach.
     """
-    import pickle
-
-    from pyspark.sql import functions as F
-
-    def f(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        held: dict[int, tuple[int, int, int]] = (
-            pickle.loads(state.get[0]) if state.exists else {}
-        )
-        arrivals: set[tuple[int, int, int]] = set()
-        for pdf in pdfs:
-            arrivals.update(
-                (int(g), int(d), int(p))
-                for g, d, p in zip(pdf["gh"], pdf["doc_id"], pdf["pos"])
-            )
+    def step(
+        held: dict[int, tuple[int, int, int]], pdf: pd.DataFrame, now_ms: int
+    ) -> tuple[dict, list[tuple[int, int]]]:
+        arrivals = {
+            (int(g), int(d), int(p))
+            for g, d, p in zip(pdf["gh"], pdf["doc_id"], pdf["pos"])
+        }
         out: list[tuple[int, int]] = []
         for g, d, p in sorted(arrivals):
             ent = held.get(g)
@@ -371,19 +378,10 @@ def gram_repeat_positions_stream(
                 else:
                     out.append((d, p))
                     held[g] = (fd, fp, n)
-        state.update((pickle.dumps(held, protocol=4),))
-        yield pd.DataFrame(out, columns=["doc_id", "pos"])
+        return held, out
 
-    bucketed = grams.withColumn(
-        "gb", F.pmod(F.col("gh"), F.lit(n_buckets)).cast("int")
-    )
-    return bucketed.groupBy("gb").applyInPandasWithState(
-        f,
-        outputStructType=GRAM_POS_SCHEMA,
-        stateStructType=GRAM_BUCKET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    shard = F.pmod(F.col("gh"), F.lit(n_buckets)).cast("int")
+    return _sharded(grams, shard, step, GRAM_POS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

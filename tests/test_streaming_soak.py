@@ -7,8 +7,9 @@ live UDP source under ``processingTime='1 second'`` for a bounded soak
 and assert the two properties an always-on deployment needs:
 
 - **steady-state state-store size**: the keyed state plateaus at the
-  live key population (per-PID section buffers; per-(band,bh) bucket
-  rows) instead of growing with ingest volume;
+  live key population (key-shard rows holding the per-PID section
+  buffers; per-(band,bh) bucket rows) instead of growing with ingest
+  volume;
 - **bounded batch latency**: p95 triggerExecution stays well under the
   trigger interval's order of magnitude (measured via the same
   ProgressCollector that feeds the REST latency endpoint).
@@ -172,7 +173,10 @@ def test_section_reassembly_continuous_soak(spark, mux_bytes):
         # every round replays the full mux: PAT/PMT/SDT sections complete
         # each round, so output grows with rounds (not a one-shot fluke)
         assert n_secs >= SOAK_ROUNDS * 3, f"only {n_secs} sections"
-        # state = one (stream, pid) buffer per live PID (PAT/SDT/PMT/ES)
+        # state rows = the key shards that hold this mux's live PIDs
+        # (PAT/SDT/PMT/ES): at most one per PID, so <= 8 here. The
+        # per-PID bound inside a shard is held by
+        # tests/test_key_shards.py::test_shard_holds_one_entry_per_live_key
         _soak_asserts(collector, q, state_bound=8)
     finally:
         q.stop()

@@ -12,6 +12,11 @@ Times, warm (min of 3 after one warm-up), under ``get_spark()``:
  - registered stream_* queries with the session's partition count latched
    at each value in QUERY_PARTS (the runner's ceiling, and the floor of
    the compute-bound state machines)
+ - keyed state on a fixed datagram feed (FEED_STREAMS streams of
+   FEED_DATAGRAMS 7-packet datagrams of the default fixture mux, one
+   micro-batch): the addBatch of cc_state_stream, section_reassembly_stream
+   and ``floor`` — the counting applyInPandasWithState above, grouped on
+   the same key shards: the framework cost those two operators sit on
 
 Every stream goes through ``streaming.runner`` (``_stage_dir`` and
 ``run_available_now``), so the probe measures the engine's own path.
@@ -36,6 +41,8 @@ QUERIES = (
     "stream_dedup_minhash",
     "stream_approx_distinct_hll",
 )
+FEED_STREAMS = 6
+FEED_DATAGRAMS = 200
 
 
 def _min3(fn) -> float:
@@ -53,8 +60,11 @@ def main(sf_dir: str) -> None:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from streamprocessors_spark import plans
+    from streamprocessors_spark.codec.fixtures import build_ts
     from streamprocessors_spark.session import get_spark
+    from streamprocessors_spark.sources import packets_from_binary_column
     from streamprocessors_spark.streaming import runner as R
+    from streamprocessors_spark.streaming import stateful as S
     from streamprocessors_spark.streaming.metrics import ProgressCollector
 
     spark = get_spark(
@@ -130,6 +140,34 @@ def main(sf_dir: str) -> None:
     for parts in PARTS:
         results[f"agg_p{parts}"] = _min3(lambda: agg(parts))
         results[f"stateful_p{parts}"] = _min3(lambda: stateful(parts))
+
+    # keyed state: one micro-batch of the fixed datagram feed per run
+    dgram = 7 * 188
+    mux = (build_ts() * 2)[: FEED_DATAGRAMS * dgram]
+    feed = os.path.join(tempfile.mkdtemp(prefix="spgraft_feed_"), "feed")
+    feed_schema = "stream_id string, value binary, base bigint"
+    spark.createDataFrame(
+        [(f"s{k}", mux[i : i + dgram], i // 188)
+         for k in range(FEED_STREAMS) for i in range(0, len(mux), dgram)],
+        feed_schema,
+    ).write.parquet(feed)
+
+    def floor(pkts):
+        return pkts.withColumn("shard", S.key_shard()).groupBy("shard").applyInPandasWithState(
+            count_rows, "g int, n long", "n long", "append", GroupStateTimeout.NoTimeout
+        )
+
+    spark.streams.addListener(collector)
+    for op in (S.cc_state_stream, S.section_reassembly_stream, floor):
+        ms = []
+        for _ in range(4):  # a warm-up run, then min of 3
+            seen = len(collector.snapshot())
+            raw = spark.readStream.schema(feed_schema).parquet(feed)
+            R.run_available_now(op(packets_from_binary_column(raw, index_col="base"))).count()
+            time.sleep(1.0)  # listener events arrive on the bus thread
+            ms.append(max(r[7]["addBatch"] for r in collector.snapshot()[seen:]))
+        results[f"{op.__name__}_add_batch_ms"] = min(ms[1:])
+    spark.streams.removeListener(collector)
 
     plans.load_all()
     for parts in QUERY_PARTS:
