@@ -56,6 +56,7 @@ from streamprocessors_spark.functions import dialect as D
 from streamprocessors_spark.functions.dialect import DUCK, SPARK
 from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
+from streamprocessors_spark.storage import artifact
 
 # ---------------------------------------------------------------------------
 # Host-level PageRank in exact integer arithmetic
@@ -458,32 +459,29 @@ def _qc_pocket_weights(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return fxl, wbest
 
 
-# Trained classifier control-plane artifact, memoized per corpus dir
-# (the _KMEANS_TRAINED_CACHE precedent in llm_ops.py): the pocket
+# Trained classifier control-plane artifact, memoized per corpus
+# (the _kmeans_trained precedent in llm_ops.py): the pocket
 # weights are trained OFFLINE once and shipped to every scorer — the
 # deployment model of every production quality filter. QC_DIMS+1 rows
 # (~4 KB of driver memory per entry); retraining per scoring query
 # would re-run the full multi-epoch dataflow each time.
-_QC_TRAINED_CACHE: dict = {}
-
-
 def _qc_trained_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pocket weight table as a literal frame from the memoized
-    control-plane artifact — trains on first use per corpus dir."""
-    key = sf_dir
-    if key not in _QC_TRAINED_CACHE:
+    control-plane artifact — trains on first use per corpus."""
+
+    def train() -> list[tuple[int, int, int]]:
         fxl, wbest = _qc_pocket_weights(_docs(spark, sf_dir))
         # control-plane collect: the trained model (QC_DIMS+1 rows)
-        _QC_TRAINED_CACHE[key] = [
-            (int(r.j), int(r.w), int(r.epoch)) for r in wbest.collect()
-        ]
+        weights = [(int(r.j), int(r.w), int(r.epoch)) for r in wbest.collect()]
         fxl.unpersist()  # training features are not needed for scoring
+        return weights
+
     # VALUES literal (LocalRelation): stays pure-JVM and broadcastable;
     # createDataFrame would pin a Python-serialized ExistingRDD into
     # every serving plan
     rows = ", ".join(
         f"({j}, CAST({w} AS BIGINT), {e})"
-        for j, w, e in _QC_TRAINED_CACHE[key]
+        for j, w, e in artifact(spark, sf_dir, "qc_weights", train)
     )
     return spark.sql(
         f"SELECT col1 AS j, col2 AS w, col3 AS epoch FROM (VALUES {rows})"

@@ -42,6 +42,7 @@ from streamprocessors_spark.functions import vectors as V
 from streamprocessors_spark.functions.dialect import DUCK, SPARK
 from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
+from streamprocessors_spark.storage import artifact, durable_frame
 
 # Jaccard acceptance threshold for near-dup verification: 2*inter >= union
 # (J >= 0.5), kept in exact integer arithmetic.
@@ -359,14 +360,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the recall gate) READS it instead of re-running the LSH+verify
 # pipeline — the pipeline was measured to dominate
 # dedup_multimodal_verdict's 100x shuffle. Pair-graph-sized.
-_TEXT_PAIRS_CACHE: dict = {}
-
-
 def verified_text_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from streamprocessors_spark.storage import durable_frame
-
     return durable_frame(
-        _TEXT_PAIRS_CACHE,
         spark,
         sf_dir,
         "text_pairs",
@@ -1082,37 +1077,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The stored IVF index (per-old-vector cell assignment), memoized per
-# corpus dir like the snapshot-dedup store: production writes it at
-# index-build time; only the DELTA is assigned at append time.
-_IVF_INDEX_CACHE: dict = {}
-
-
-def evict_stale_app_entries(cache: dict, app_id: str) -> None:
-    """Drop (applicationId, ...)-keyed cache entries whose session is not
-    the current one: entries hold localCheckpoint-pinned frames, which are
-    dead references once the session that pinned them stops — and a
-    long-lived process that cycles sessions/corpora would otherwise grow
-    these dicts unboundedly (ADVICE r10). One live app per process."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-
-
-def corpus_cached(cache: dict, spark: SparkSession, sf_dir: str, build):
-    """The ONE per-corpus memoize pattern every persisted-artifact store
-    uses (pair tables, labels, IVF index, snapshot band store, cascade
-    verdicts): (applicationId, sf_dir)-keyed, stale-app entries evicted
-    on every insert-path call, built once via ``build()`` (which must
-    localCheckpoint when the artifact needs executor pinning). One
-    helper so the shared artifact can never drift between its consumers
-    and the eviction call can never be forgotten at the next store."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_stale_app_entries(cache, key[0])
-    if key not in cache:
-        cache[key] = build()
-    return cache[key]
-
-
 def _ivf_cents(e: DataFrame) -> DataFrame:
     return e.where(F.col("vec_id") < ANN_IVF_CELLS).select(
         F.col("vec_id").alias("cell"),
@@ -1142,6 +1106,9 @@ def _ivf_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
 _IVF_APPEND_DELTA = f"(vec_id % 7 = 3 AND vec_id >= {ANN_IVF_CELLS})"
 
 
+# The stored IVF index (per-old-vector cell assignment), memoized per
+# corpus like the snapshot-dedup store: production writes it at
+# index-build time; only the DELTA is assigned at append time.
 def _ivf_stored_index(
     spark: SparkSession, sf_dir: str, e: DataFrame, cents: DataFrame
 ) -> DataFrame:
@@ -1150,10 +1117,7 @@ def _ivf_stored_index(
     by every session (VERDICT r11 #2) — SHARED by the append / remove /
     retrain maintenance paths, one definition so the artifact can never
     drift between them."""
-    from streamprocessors_spark.storage import durable_frame
-
     return durable_frame(
-        _IVF_INDEX_CACHE,
         spark,
         sf_dir,
         "ivf_index",
@@ -1306,7 +1270,7 @@ _IVF_REMOVE_SLICE = (
     "double-dropped a vector hash-mismatches. Work scales with the "
     "removal delta: the anti-join is a point-delete batch against the "
     "vec_id-keyed stored index; per-cell counts are k-row aggregates. "
-    "Shares the persisted index artifact (_IVF_INDEX_CACHE) with "
+    "Shares the persisted index artifact (the ivf_index store) with "
     "ann_ivf_append — one index, both maintenance directions.",
     tags=("vector", "ann", "ivf", "pipeline"),
 )
@@ -1514,7 +1478,7 @@ IVF_RETRAIN_THRESH_MILLI = 3
     "balloons after appends is exactly the cell whose centroid no "
     "longer represents its list (Jegou '11's retrain criterion). Scale "
     "shape: both counts read the PERSISTED index (checkpoint scan + "
-    "the delta assignment, shared via _IVF_INDEX_CACHE with the "
+    "the delta assignment, shared via the ivf_index store with the "
     "append/remove paths); everything after is k-cell-sized with a "
     "1-row total cross join. All exact integers.",
     tags=("vector", "ann", "ivf", "quality", "pipeline"),
@@ -2465,19 +2429,6 @@ def _bpe_seq_round_ctes() -> str:
     return ",\n    ".join(parts)
 
 
-# Trained-tokenizer control-plane artifact, memoized per corpus dir (the
-# _QC_TRAINED_CACHE / _kmeans_trained precedent): the ordered merge table
-# is BPE_MERGE_ROUNDS rows (bounded, ~8 tuples of two symbols + a count),
-# trained once per corpus and served to every APPLY-side consumer
-# (bpe_encode_tokens, tokenized_context_packing) — the deployment model
-# of every production tokenizer. Serving re-derives the word -> symbol
-# table by APPLYING the known merges (8 chained replaces over one vocab
-# groupBy, zero driver jobs) instead of re-running 8 sequential argmax
-# collect rounds. bpe_merge_sequence (the TRAIN query) always retrains —
-# the honest training cost stays measured, like quality_classifier_train.
-_BPE_TRAINED_CACHE: dict = {}
-
-
 def _bpe_apply_merges(
     seq: DataFrame, merges: list[tuple[int, str, str, int]]
 ) -> DataFrame:
@@ -2523,6 +2474,17 @@ def _bpe_seq0_docs(docs: DataFrame) -> DataFrame:
     )
 
 
+# Trained-tokenizer control-plane artifact, memoized per corpus (the
+# _qc_trained_weights / _kmeans_trained precedent): the ordered merge table
+# is BPE_MERGE_ROUNDS rows (bounded, ~8 tuples of two symbols + a count),
+# trained once per corpus and served to every APPLY-side consumer
+# (bpe_encode_tokens, tokenized_context_packing) — the deployment model
+# of every production tokenizer. Serving re-derives the word -> symbol
+# table by APPLYING the known merges (8 chained replaces over one vocab
+# groupBy, zero driver jobs) instead of re-running 8 sequential argmax
+# collect rounds. bpe_merge_sequence (the TRAIN query) always retrains —
+# the honest training cost stays measured, like quality_classifier_train.
+#
 # The trained tokenizer's word -> symbol-sequence encoding table,
 # memoized per (app, corpus) alongside the merge list: the serving
 # artifact every encoder/packer consumer joins against (a production
@@ -2532,22 +2494,19 @@ def _bpe_seq0_docs(docs: DataFrame) -> DataFrame:
 # (6 consumer queries x 4 bench passes = dozens of duplicate pinned
 # vocab blocks), and every consumer plan carried the 2x40-replace
 # merge-application expression chain. Vocab-sized.
-_BPE_SEQ_CACHE: dict = {}
-
-
 def _bpe_trained(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Serving path: the memoized merge table (training on first use per
-    corpus dir) and the memoized encoding table it induces — zero
+    corpus) and the memoized encoding table it induces — zero
     driver jobs per call once trained and pinned."""
-    if sf_dir not in _BPE_TRAINED_CACHE:
-        _bpe_train(spark, sf_dir)  # fills the merge cache
-    merges = _BPE_TRAINED_CACHE[sf_dir]
-    seq = corpus_cached(
-        _BPE_SEQ_CACHE,
+    merges = artifact(
+        spark, sf_dir, "bpe_merges", lambda: _bpe_train(spark, sf_dir)[0]
+    )
+    seq = artifact(
         spark,
         sf_dir,
+        "bpe_seq",
         lambda: _bpe_apply_merges(
             _bpe_seq0(spark, sf_dir), merges
         ).localCheckpoint(),
@@ -2559,8 +2518,9 @@ def _bpe_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Run the merge loop; return (merge table rows, final (word, seq, cnt)
-    frame — the word->symbol-sequence encoding table). Fills the trained
-    cache as a side effect.
+    frame — the word->symbol-sequence encoding table). Seeds the serving
+    merge table as a side effect, so a session that ran the TRAIN query
+    never trains again to serve.
 
     Driver-side per round: one argmax ROW (the merge decision — a
     control-plane scalar like the CC convergence probe), never the
@@ -2608,7 +2568,7 @@ def _bpe_train(
             ).alias("seq"),
             "cnt",
         )
-    _BPE_TRAINED_CACHE[sf_dir] = merges
+    artifact(spark, sf_dir, "bpe_merges", lambda: merges)
     return merges, seq
 
 
@@ -3718,9 +3678,6 @@ def _pq_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The flat-PQ encoded code table (vec_id, m, code) — frame-valued, per
 # (app, corpus); see _pq_codes_flat.
-_PQ_FLAT_CODES_CACHE: dict = {}
-
-
 def _pq_flat_codes_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncached flat-PQ encode: per-(vector, sub-space) argmin codeword
     as a map-side max_by over the packed key (the IVF argmin contract;
@@ -3741,15 +3698,15 @@ def _pq_codes_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flat-PQ code table, memoized per (app, corpus): it IS the
     stored index payload (FAISS IndexPQ writes exactly this at
     index-build time; every ADC query reads it) — the same decision as
-    _PQ_CODES_CACHE for the IVF+PQ family and the durable ivf_index
+    the pq_codes artifact for the IVF+PQ family and the durable ivf_index
     store for flat IVF. Index-sized (N x PQ_M rows); the encode is paid
     once per session, measured by the bench cold pass. Consumers:
     ann_pq_topk, ann_pq_rerank_topk (and ann_pq_recall through the
     former), which previously each re-encoded the corpus per call."""
-    return corpus_cached(
-        _PQ_FLAT_CODES_CACHE,
+    return artifact(
         spark,
         sf_dir,
+        "pq_flat_codes",
         lambda: _pq_flat_codes_frame(spark, sf_dir).localCheckpoint(),
     )
 
@@ -4073,128 +4030,119 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_topk_frame(spark, sf_dir)
 
 
-# Trained vector-index control-plane artifacts, memoized per corpus dir:
+# Trained vector-index control-plane artifacts, memoized per corpus:
 # the coarse quantizer (8 cells x 64 dims) and, for IVF+PQ, the
 # Lloyd-refined codebook (<= IVFPQ_M x IVFPQ_K rows). At 100 TB these
 # are trained OFFLINE once and shipped to every worker (the FAISS
 # deployment model); retraining per query would re-scan the corpus.
 # ~20 KB of driver memory per entry.
-_KMEANS_TRAINED_CACHE: dict = {}
-_IVFPQ_INDEX_CACHE: dict = {}
-# The encoded PQ code table (the stored index payload) — frame-valued,
-# per (app, corpus); see _ivfpq_topk_frame.
-_PQ_CODES_CACHE: dict = {}
-
-
 def _kmeans_trained(spark: SparkSession, sf_dir: str):
     """(cent_rows, cqa_rows): the trained coarse centroids as
     (cell, double-mean array, self-dot norm) rows plus the integer
-    component arrays — collected once per corpus dir (512 s2 rows).
+    component arrays — collected once per corpus (512 s2 rows).
 
     Every scalar keeps the SQL text of the oracle CTE form
     (s/(n*SCALE), floor(s/n)): integer inputs below 2^53, so the
     Python doubles are bit-identical to the engine-computed ones."""
     import math
 
-    key = sf_dir
-    if key in _KMEANS_TRAINED_CACHE:
-        return _KMEANS_TRAINED_CACHE[key]
-    _embs(spark, sf_dir).createOrReplaceTempView("sp_kmeans_embeddings")
-    # control-plane collect: the trained coarse quantizer (512 rows)
-    s2 = spark.sql(
-        f"WITH {_kmeans_ctes(SPARK, table='sp_kmeans_embeddings')} "
-        "SELECT cell, dim, s, n FROM s2"
-    ).collect()
-    percell: dict[int, dict[int, tuple[int, int]]] = {}
-    for r in s2:
-        percell.setdefault(int(r["cell"]), {})[int(r["dim"])] = (
-            int(r["s"]),
-            int(r["n"]),
-        )
-    cent_rows = []
-    cqa_rows = []
-    for cell in sorted(percell):
-        dims = percell[cell]
-        cemb = []
-        cela = []
-        for d in range(EMB_DIM):
-            s, n = dims[d]
-            # same doubles the SQL computes: s/(n*SCALE) for the mean,
-            # floor(s/n) for the integer component (both < 2^53)
-            cemb.append(s / (n * KM_SCALE))
-            cela.append(math.floor(s / n))
-        cnorm = 0.0
-        for v in cemb:  # left-to-right fold, same order as dot_double
-            cnorm += v * v
-        cent_rows.append((cell, cemb, cnorm))
-        cqa_rows.append((cell, cela))
-    _KMEANS_TRAINED_CACHE[key] = (cent_rows, cqa_rows)
-    return cent_rows, cqa_rows
+    def _build():
+        _embs(spark, sf_dir).createOrReplaceTempView("sp_kmeans_embeddings")
+        # control-plane collect: the trained coarse quantizer (512 rows)
+        s2 = spark.sql(
+            f"WITH {_kmeans_ctes(SPARK, table='sp_kmeans_embeddings')} "
+            "SELECT cell, dim, s, n FROM s2"
+        ).collect()
+        percell: dict[int, dict[int, tuple[int, int]]] = {}
+        for r in s2:
+            percell.setdefault(int(r["cell"]), {})[int(r["dim"])] = (
+                int(r["s"]),
+                int(r["n"]),
+            )
+        cent_rows = []
+        cqa_rows = []
+        for cell in sorted(percell):
+            dims = percell[cell]
+            cemb = []
+            cela = []
+            for d in range(EMB_DIM):
+                s, n = dims[d]
+                # same doubles the SQL computes: s/(n*SCALE) for the mean,
+                # floor(s/n) for the integer component (both < 2^53)
+                cemb.append(s / (n * KM_SCALE))
+                cela.append(math.floor(s / n))
+            cnorm = 0.0
+            for v in cemb:  # left-to-right fold, same order as dot_double
+                cnorm += v * v
+            cent_rows.append((cell, cemb, cnorm))
+            cqa_rows.append((cell, cela))
+        return cent_rows, cqa_rows
+
+    return artifact(spark, sf_dir, "kmeans", _build)
 
 
 def _ivfpq_trained(spark: SparkSession, sf_dir: str):
     """(cent_rows, cqa_rows, cb_rows): trained coarse centroids plus the
-    Lloyd-refined PQ codebook — collected once per corpus dir."""
-    key = sf_dir
-    if key in _IVFPQ_INDEX_CACHE:
-        return _IVFPQ_INDEX_CACHE[key]
-    cent_rows, cqa_rows = _kmeans_trained(spark, sf_dir)
-    cent = spark.createDataFrame(
-        cent_rows, "cell long, cemb array<double>, cnorm double"
-    )
-    cqa = spark.createDataFrame(cqa_rows, "cell long, cela array<bigint>")
-    relsub = _ivfpq_relsub(spark, sf_dir, cent, cqa)
-    d2 = " + ".join(
-        f"(e{j} - c{j}) * (e{j} - c{j})" for j in range(IVFPQ_SUB)
-    )
-    cb_seed = relsub.where(F.col("vec_id") < IVFPQ_K).selectExpr(
-        "cast(vec_id as int) as code",
-        "m as cm",
-        *[f"e{j} as c{j}" for j in range(IVFPQ_SUB)],
-    )
-    train = relsub.where("vec_id % 4 = 0")
-    # bounded: cb_seed is <= IVFPQ_K x IVFPQ_M = 2048 codebook rows.
-    # e0..e{SUB-1} are functions of (vec_id, m) alone, so the argmin
-    # aggregate carries them with any_value — no join-back to train.
-    codes0 = (
-        train.join(F.broadcast(cb_seed), F.col("m") == F.col("cm"))
-        .selectExpr(
-            "vec_id",
-            "m",
-            "code",
-            f"cast({d2} as bigint) as d2",
-            *[f"e{j}" for j in range(IVFPQ_SUB)],
+    Lloyd-refined PQ codebook — collected once per corpus."""
+
+    def _build():
+        cent_rows, cqa_rows = _kmeans_trained(spark, sf_dir)
+        cent = spark.createDataFrame(
+            cent_rows, "cell long, cemb array<double>, cnorm double"
         )
-        .groupBy("vec_id", "m")
-        .agg(
-            F.expr(f"max_by(code, -(d2 * {PQ_CODE_SPAN} + code))").alias(
-                "code"
-            ),
-            *[
-                F.expr(f"any_value(e{j})").alias(f"e{j}")
-                for j in range(IVFPQ_SUB)
-            ],
+        cqa = spark.createDataFrame(cqa_rows, "cell long, cela array<bigint>")
+        relsub = _ivfpq_relsub(spark, sf_dir, cent, cqa)
+        d2 = " + ".join(
+            f"(e{j} - c{j}) * (e{j} - c{j})" for j in range(IVFPQ_SUB)
         )
-    )
-    # control-plane collect #2: the Lloyd-refined codebook (<= 2048 rows)
-    cb_rows = (
-        codes0.groupBy("m", "code")
-        .agg(
-            *[
-                # integer residuals: exact BIGINT sum, cast after (the
-                # order-independent form — mirrors the oracle text)
-                F.expr(
-                    f"cast(floor(cast(sum(e{j}) as double) / count(*)) "
-                    f"as bigint)"
-                ).alias(f"c{j}")
-                for j in range(IVFPQ_SUB)
-            ]
+        cb_seed = relsub.where(F.col("vec_id") < IVFPQ_K).selectExpr(
+            "cast(vec_id as int) as code",
+            "m as cm",
+            *[f"e{j} as c{j}" for j in range(IVFPQ_SUB)],
         )
-        .collect()  # bounded: <= IVFPQ codebook rows (2048), per comment above
-    )
-    out = (cent_rows, cqa_rows, [tuple(r) for r in cb_rows])
-    _IVFPQ_INDEX_CACHE[key] = out
-    return out
+        train = relsub.where("vec_id % 4 = 0")
+        # bounded: cb_seed is <= IVFPQ_K x IVFPQ_M = 2048 codebook rows.
+        # e0..e{SUB-1} are functions of (vec_id, m) alone, so the argmin
+        # aggregate carries them with any_value — no join-back to train.
+        codes0 = (
+            train.join(F.broadcast(cb_seed), F.col("m") == F.col("cm"))
+            .selectExpr(
+                "vec_id",
+                "m",
+                "code",
+                f"cast({d2} as bigint) as d2",
+                *[f"e{j}" for j in range(IVFPQ_SUB)],
+            )
+            .groupBy("vec_id", "m")
+            .agg(
+                F.expr(f"max_by(code, -(d2 * {PQ_CODE_SPAN} + code))").alias(
+                    "code"
+                ),
+                *[
+                    F.expr(f"any_value(e{j})").alias(f"e{j}")
+                    for j in range(IVFPQ_SUB)
+                ],
+            )
+        )
+        # control-plane collect #2: the Lloyd-refined codebook (<= 2048 rows)
+        cb_rows = (
+            codes0.groupBy("m", "code")
+            .agg(
+                *[
+                    # integer residuals: exact BIGINT sum, cast after (the
+                    # order-independent form — mirrors the oracle text)
+                    F.expr(
+                        f"cast(floor(cast(sum(e{j}) as double) / count(*)) "
+                        f"as bigint)"
+                    ).alias(f"c{j}")
+                    for j in range(IVFPQ_SUB)
+                ]
+            )
+            .collect()  # bounded: <= IVFPQ codebook rows (2048), per comment above
+        )
+        return (cent_rows, cqa_rows, [tuple(r) for r in cb_rows])
+
+    return artifact(spark, sf_dir, "ivfpq", _build)
 
 
 def _ivfpq_qv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4302,9 +4250,7 @@ def _ivfpq_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    codes = corpus_cached(
-        _PQ_CODES_CACHE, spark, sf_dir, _build_codes
-    )
+    codes = artifact(spark, sf_dir, "pq_codes", _build_codes)
     # query side: 10 vectors x 8 cells / x 2 probed cells — all bounded
     cos_probe = D.cosine(SPARK, "cemb", "embedding")
     w_probe = Window.partitionBy("vec_id").orderBy(
@@ -5517,40 +5463,37 @@ def _bloom_pos(d: str, g: str, i: int) -> str:
     return f"({D.md5int(d, salted)} % {BLOOM_M})"
 
 
-_BLOOM_BITS_CACHE: dict = {}
-
-
 def _bloom_bits(spark: SparkSession, sf_dir: str) -> list[int]:
     """The benchmark set's Bloom bitset as {_BLOOM_WORDS} signed 64-bit
-    words, memoized per corpus dir. Bounded by the CONSTANT filter size
+    words, memoized per corpus. Bounded by the CONSTANT filter size
     (<= BLOOM_M distinct positions collected), never by corpus size —
     this is the deployment artifact: at 100 TB the eval-suite filter is
     built once (kBs) and shipped to every worker; probing is then a
     scan-local bit test with NO join and NO shuffle of corpus grams."""
-    if sf_dir in _BLOOM_BITS_CACHE:
-        return _BLOOM_BITS_CACHE[sf_dir]
-    bench_grams = (
-        _docs(spark, sf_dir)
-        .where("doc_id % 50 = 0")
-        .selectExpr(f"{D.words(SPARK)} as ws")
-        .selectExpr(f"{TP.shingles(SPARK, 'ws')} as sh")
-        .select(F.explode_outer("sh").alias("g"))
-        .where("g is not null")
-        .distinct()
-    )
-    poss = ", ".join(_bloom_pos(SPARK, "g", i) for i in range(BLOOM_K))
-    rows = (
-        bench_grams.selectExpr(f"explode(array({poss})) as pos")
-        .distinct()
-        .collect()  # bounded: distinct Bloom bit positions (<= filter size constant)
-    )
-    words = [0] * _BLOOM_WORDS
-    for r in rows:
-        p = int(r["pos"])
-        words[p // 64] |= 1 << (p % 64)
-    signed = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    _BLOOM_BITS_CACHE[sf_dir] = signed
-    return signed
+
+    def _build():
+        bench_grams = (
+            _docs(spark, sf_dir)
+            .where("doc_id % 50 = 0")
+            .selectExpr(f"{D.words(SPARK)} as ws")
+            .selectExpr(f"{TP.shingles(SPARK, 'ws')} as sh")
+            .select(F.explode_outer("sh").alias("g"))
+            .where("g is not null")
+            .distinct()
+        )
+        poss = ", ".join(_bloom_pos(SPARK, "g", i) for i in range(BLOOM_K))
+        rows = (
+            bench_grams.selectExpr(f"explode(array({poss})) as pos")
+            .distinct()
+            .collect()  # bounded: distinct Bloom bit positions (<= filter size constant)
+        )
+        words = [0] * _BLOOM_WORDS
+        for r in rows:
+            p = int(r["pos"])
+            words[p // 64] |= 1 << (p % 64)
+        return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
+
+    return artifact(spark, sf_dir, "bloom_bits", _build)
 
 
 def _bloom_oracle() -> str:
@@ -5845,9 +5788,6 @@ _LM_SURPRISAL_DUCK = (
 
 # Trained add-one bigram LM tables — frame-valued, per (app, corpus);
 # see _lm_trained.
-_LM_BIGRAM_CACHE: dict = {}
-
-
 def _lm_trained(spark: SparkSession, sf_dir: str):
     """(big, hist, vs) — the trained add-one bigram LM as checkpointed
     frames, memoized per (app, corpus): bigram counts, history counts
@@ -5881,7 +5821,7 @@ def _lm_trained(spark: SparkSession, sf_dir: str):
         )
         return big, hist, vs
 
-    return corpus_cached(_LM_BIGRAM_CACHE, spark, sf_dir, _build)
+    return artifact(spark, sf_dir, "lm_bigram", _build)
 
 
 @register(
@@ -6065,9 +6005,6 @@ def _nb_score_ctes(d: str) -> str:
 # token-likelihood table (checkpointed frame). Scoring stays a per-call
 # corpus pass. Consumers: nb_lang_classifier and
 # lang_id_confusion_matrix; the bench cold pass pays the training.
-_NB_TRAINED_CACHE: dict = {}
-
-
 def _nb_trained(spark: SparkSession, sf_dir: str) -> dict:
     def build() -> dict:
         tr = (
@@ -6111,7 +6048,7 @@ def _nb_trained(spark: SparkSession, sf_dir: str) -> dict:
             "wc": wc,
         }
 
-    return corpus_cached(_NB_TRAINED_CACHE, spark, sf_dir, build)
+    return artifact(spark, sf_dir, "nb_model", build)
 
 
 @register(
@@ -6322,68 +6259,62 @@ _TOPPC_FINAL = (
 )
 
 
-# Trained top-PC artifact, memoized per corpus dir (the _kmeans_trained
+# Trained top-PC artifact, memoized per corpus (the _kmeans_trained
 # pattern): at 100 TB the direction is trained offline once and shipped
 # to every worker; ~1 KB of driver memory per entry.
-_TOP_PC_CACHE: dict = {}
-
-
 def _top_pc_trained(spark: SparkSession, sf_dir: str):
     """[(dim, v_q, v_prev_q)]: the power-iteration eigenvector at 1e6
-    fixed-point, trained once per corpus dir."""
+    fixed-point, trained once per corpus."""
     import math
 
-    if sf_dir in _TOP_PC_CACHE:
-        return _TOP_PC_CACHE[sf_dir]
-    # control-plane collect: the covariance is EXACTLY d(d+1)/2 = 2080
-    # rows by construction (never corpus-sized) — the offline-trained-
-    # artifact pattern (_kmeans_trained): the distributed pass ends at
-    # the covariance; the constant-size iteration runs on the driver in
-    # the same exact integer arithmetic the oracle unrolls in SQL, so
-    # the two engines derive the eigenvector through genuinely
-    # independent formulations (Python loop vs unrolled CTEs).
-    rows = (
-        embedding_cov(_embs(spark, sf_dir))
-        .select("di", "dj", "cov_num")
-        .collect()  # bounded: EMB_DIM^2 covariance cells (fixed dimensionality)
-    )
-    m: dict = {}
-    for r in rows:
-        m[(r["di"], r["dj"])] = int(r["cov_num"])
-        m[(r["dj"], r["di"])] = int(r["cov_num"])
-    dims = sorted({j for j, _ in m})
-    ma = max(abs(x) for x in m.values())
-    sh = max(ma.bit_length() - 1 - PC_SHIFT_BITS, 0)
+    def _build():
+        # control-plane collect: the covariance is EXACTLY d(d+1)/2 = 2080
+        # rows by construction (never corpus-sized) — the offline-trained-
+        # artifact pattern (_kmeans_trained): the distributed pass ends at
+        # the covariance; the constant-size iteration runs on the driver in
+        # the same exact integer arithmetic the oracle unrolls in SQL, so
+        # the two engines derive the eigenvector through genuinely
+        # independent formulations (Python loop vs unrolled CTEs).
+        rows = (
+            embedding_cov(_embs(spark, sf_dir))
+            .select("di", "dj", "cov_num")
+            .collect()  # bounded: EMB_DIM^2 covariance cells (fixed dimensionality)
+        )
+        m: dict = {}
+        for r in rows:
+            m[(r["di"], r["dj"])] = int(r["cov_num"])
+            m[(r["dj"], r["di"])] = int(r["cov_num"])
+        dims = sorted({j for j, _ in m})
+        ma = max(abs(x) for x in m.values())
+        sh = max(ma.bit_length() - 1 - PC_SHIFT_BITS, 0)
 
-    def shr(x: int, s: int) -> int:
-        # truncate toward zero (the dialect-neutral _shr_signed form)
-        return -((-x) >> s) if x < 0 else x >> s
+        def shr(x: int, s: int) -> int:
+            # truncate toward zero (the dialect-neutral _shr_signed form)
+            return -((-x) >> s) if x < 0 else x >> s
 
-    mm = {jk: shr(x, sh) for jk, x in m.items()}
-    v = {j: PC_VSCALE for j in dims}
-    prev = dict(v)
-    for _ in range(PC_ROUNDS):
-        w = {
-            j: sum(mm.get((j, k), 0) * v[k] for k in dims) for j in dims
-        }
-        wma = max(abs(x) for x in w.values())
-        wsh = max(wma.bit_length() - 1 - PC_SHIFT_BITS, 0)
-        u = {j: shr(x, wsh) for j, x in w.items()}
-        s = sum(x * x for x in u.values())
-        prev = v
-        v = {
-            j: (
-                0
-                if s == 0
-                else math.floor(float(x) / math.sqrt(float(s)) * PC_VSCALE)
-            )
-            for j, x in u.items()
-        }
-    out = [(int(j), int(v[j]), int(prev[j])) for j in dims]
-    _TOP_PC_CACHE[sf_dir] = out
-    return out
+        mm = {jk: shr(x, sh) for jk, x in m.items()}
+        v = {j: PC_VSCALE for j in dims}
+        prev = dict(v)
+        for _ in range(PC_ROUNDS):
+            w = {
+                j: sum(mm.get((j, k), 0) * v[k] for k in dims) for j in dims
+            }
+            wma = max(abs(x) for x in w.values())
+            wsh = max(wma.bit_length() - 1 - PC_SHIFT_BITS, 0)
+            u = {j: shr(x, wsh) for j, x in w.items()}
+            s = sum(x * x for x in u.values())
+            prev = v
+            v = {
+                j: (
+                    0
+                    if s == 0
+                    else math.floor(float(x) / math.sqrt(float(s)) * PC_VSCALE)
+                )
+                for j, x in u.items()
+            }
+        return [(int(j), int(v[j]), int(prev[j])) for j in dims]
 
-
+    return artifact(spark, sf_dir, "top_pc", _build)
 
 
 @register(
@@ -7142,12 +7073,9 @@ def ulm_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The trained ULM tokenizer's word -> token-count serving table
 # (vocab-sized), memoized per (app, corpus) — the sentencepiece-model
-# artifact the apply path ships, mirroring _BPE_SEQ_CACHE: the training
+# artifact the apply path ships, mirroring the bpe_seq artifact: the training
 # query (ulm_train_vocab) keeps paying the honest EM cost per call; the
 # APPLY query reads the trained table instead of re-running EM.
-_ULM_WTOK_CACHE: dict = {}
-
-
 def _ulm_wtok(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         final, vocab = _ulm_train(spark, sf_dir)
@@ -7157,7 +7085,7 @@ def _ulm_wtok(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    return corpus_cached(_ULM_WTOK_CACHE, spark, sf_dir, build)
+    return artifact(spark, sf_dir, "ulm_wtok", build)
 
 
 @register(
@@ -7888,9 +7816,6 @@ def lm_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Trained Kneser-Ney model tables — frame-valued, per (app, corpus);
 # see _kn_trained.
-_KN_MODEL_CACHE: dict = {}
-
-
 def _kn_trained(spark: SparkSession, sf_dir: str):
     """(big, hist, cont, scal) — the trained KN model as checkpointed
     frames, memoized per (app, corpus): the bigram counts, history
@@ -7940,7 +7865,7 @@ def _kn_trained(spark: SparkSession, sf_dir: str):
         scal = nbig.crossJoin(F.broadcast(vs)).localCheckpoint()
         return big, hist, cont, scal
 
-    return corpus_cached(_KN_MODEL_CACHE, spark, sf_dir, _build)
+    return artifact(spark, sf_dir, "kn_model", _build)
 
 
 # ---------------------------------------------------------------------------

@@ -51,6 +51,7 @@ from streamprocessors_spark.functions import multimodal as MM
 from streamprocessors_spark.functions.dialect import DUCK, SPARK
 from streamprocessors_spark.plans.registry import REGISTRY, register
 from streamprocessors_spark.session import read_table
+from streamprocessors_spark.storage import durable_frame
 
 IMG_W, IMG_H = MM.PPM_W, MM.PPM_H  # 8 x 6 fixture raster
 # Bytes before the raster in the REAL payload: the 12-byte SPMM
@@ -298,14 +299,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table is a persisted per-snapshot artifact; composed consumers
 # (image keep-list, multimodal verdict) read it instead of re-running
 # the signature+band pipeline. Pair-sized.
-_IMAGE_PAIRS_CACHE: dict = {}
-
-
 def verified_image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from streamprocessors_spark.storage import durable_frame
-
     return durable_frame(
-        _IMAGE_PAIRS_CACHE,
         spark,
         sf_dir,
         "image_pairs",
@@ -316,18 +311,13 @@ def verified_image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Image cluster LABELS, durable per corpus (see _TEXT_LABELS_CACHE).
-_IMAGE_LABELS_CACHE: dict = {}
-
-
+# Image cluster LABELS, durable per corpus (see advanced.text_keep_labels).
 def image_keep_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, canonical) over img ids — CC labels of the image pair
     store, the persisted artifact image keep-list consumers read."""
     from streamprocessors_spark.plans.advanced import _min_label_components
-    from streamprocessors_spark.storage import durable_frame
 
     return durable_frame(
-        _IMAGE_LABELS_CACHE,
         spark,
         sf_dir,
         "image_labels",

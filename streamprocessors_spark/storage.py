@@ -1,35 +1,49 @@
-"""Durable per-corpus artifact stores (VERDICT r11 #2).
+"""The one memo layer for per-corpus artifacts, in front of durable stores.
 
-The persisted dedup/ANN artifacts — the MinHash band store with
-per-bucket sizes, the v0 and full-corpus keep-list labels, the verified
-text/image pair tables, and the IVF index — were (applicationId,
-sf_dir)-keyed localCheckpoint caches. That models "write once, read by
-every consumer" within ONE session, but a real recrawl runs in a NEW
-session, where the increment would re-derive the v0 store from the v0
-corpus — the one scan incremental maintenance exists to avoid. Each
-store is therefore also written ONCE as parquet under a per-corpus
-directory; any later session loads it from disk, and the in-memory memo
-then holds a plain disk-scan frame (partition/row-group pruning instead
-of an executor-pinned lineage).
+Every artifact the engine derives from a corpus (trained models, pinned
+model and verdict frames, probe memos, streaming schema probes, and the
+durable parquet stores) is memoized here and nowhere else, through
+``artifact(spark, sf_dir, name, build)``:
 
-Layout — the shape the operator docstrings promise:
+- Key: (applicationId, ``corpus_fingerprint(sf_dir)``, name). The
+  fingerprint covers the corpus files (path + per-table size +
+  mtime_ns), so a corpus regenerated at the same path misses and
+  rebuilds instead of serving the old models and frames. The
+  applicationId scopes an entry to the session that built it: its
+  localCheckpoint-pinned frames are dead references once that session
+  stops, so every artifact is built once per (session, corpus content).
+- Eviction: every call drops the entries of every other application from
+  the whole memo (one live session per process), so a long-lived process
+  that cycles sessions does not grow it without bound.
+
+Durable stores (the MinHash band store with per-bucket sizes, the v0
+and full-corpus keep-list labels, the verified text/image pair tables,
+the IVF index) sit behind the same memo: on a miss, ``durable_frames``
+loads the store from disk, building and committing it first only if no
+session ever did. A recrawl runs in a NEW session, where re-deriving
+the v0 store from the v0 corpus would be the one scan incremental
+maintenance exists to avoid, so each store is written ONCE as parquet
+under a per-corpus directory, and the memo entry holds a pinned scan of
+it (partition/row-group pruning instead of an executor-pinned lineage).
+
+Layout, the shape the operator docstrings promise:
 - the band store is directory-partitioned on ``band`` and
   row-group-clustered on ``bh`` (sortWithinPartitions), so a
   (band, bh) probe is a partition-pruned, stats-pruned read;
 - labels are written clustered on ``doc_id``, the pair tables on
-  ``doc_a``/``img_a``, the IVF index on ``vec_id`` — key-ordered row
+  ``doc_a``/``img_a``, the IVF index on ``vec_id``; key-ordered row
   groups make the delta-bounded semi-joins point-lookup-shaped.
 At 100 TB these directories live on cloud storage next to the
 exactly-once sinks' batch dirs; the write uses the same
 stage-then-atomic-rename commit, so a concurrent builder of the same
-store either wins the rename or discards its staging copy — the content
-is a deterministic function of the corpus, so either copy is correct.
+store either wins the rename or discards its staging copy (the content
+is a deterministic function of the corpus, so either copy is correct).
 
-Staleness: the per-corpus directory name fingerprints the corpus files
-(path + per-table size + mtime_ns), so a regenerated corpus gets a
-fresh store, and ``STORE_FORMAT`` is part of every store path — BUMP IT
-whenever store-building logic changes, or a new session would silently
-read an artifact the old logic wrote.
+Staleness on disk: the per-corpus directory is named by the same
+fingerprint, so a regenerated corpus gets a fresh store, and
+``STORE_FORMAT`` is part of every store path. BUMP IT whenever
+store-building logic changes, or a new session would silently read an
+artifact the old logic wrote.
 """
 
 from __future__ import annotations
@@ -156,6 +170,25 @@ def write_store(
             os.rename(tmp, path)
 
 
+# (applicationId, corpus fingerprint, artifact name) -> artifact
+_ARTIFACTS: dict = {}
+
+
+def artifact(spark: SparkSession, sf_dir: str, name: str, build):
+    """The artifact ``name`` of the corpus at ``sf_dir``: ``build()`` runs
+    on the first call per (session, corpus content) and every later call
+    returns the same object. ``build`` must localCheckpoint a frame that
+    needs executor pinning. Two threads racing on a first call may both
+    build; the first result stored is the one both get."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in list(_ARTIFACTS) if k[0] != app]:
+        _ARTIFACTS.pop(k, None)
+    key = (app, corpus_fingerprint(sf_dir), name)
+    if key in _ARTIFACTS:
+        return _ARTIFACTS[key]
+    return _ARTIFACTS.setdefault(key, build())
+
+
 # Test hook: called with (sf_dir, [names]) whenever a store BUILD runs.
 # The cross-session pytest sets this to a raiser in session B — loading
 # from disk must never re-derive the artifact from the corpus.
@@ -163,18 +196,16 @@ _ON_BUILD = None
 
 
 def durable_frames(
-    cache: dict,
     spark: SparkSession,
     sf_dir: str,
     parts: tuple[tuple[str, tuple[str, ...], tuple[str, ...]], ...],
     build,
 ) -> tuple[DataFrame, ...]:
-    """The durable form of llm_ops.corpus_cached for FRAME-valued stores
-    built together (so multi-part artifacts can never drift apart):
-    ``parts`` is ((name, partition_by, sort_by), ...) and ``build()``
-    returns matching frames. First call in the first-ever session builds
-    and commits every part; every other call — including in a NEW
-    session — loads from disk without touching the corpus.
+    """Durable FRAME-valued stores built together (so multi-part
+    artifacts can never drift apart): ``parts`` is ((name, partition_by,
+    sort_by), ...) and ``build()`` returns matching frames. The first
+    call in the first-ever session builds and commits every part; every
+    other session loads from disk without touching the corpus.
 
     The loaded frames are localCheckpoint-pinned: a SESSION CACHE of the
     disk artifact, so the many per-query probe jobs hit executor-
@@ -184,34 +215,28 @@ def durable_frames(
     layout directly — the on-disk clustering already supports the
     pruned-probe shape; the pin is a small-store optimization, not a
     correctness dependency."""
-    from streamprocessors_spark.plans.llm_ops import evict_stale_app_entries
+    names = [name for name, _, _ in parts]
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    evict_stale_app_entries(cache, key[0])
-    if key in cache:
-        return cache[key]
-    fp = corpus_fingerprint(sf_dir)
-    paths = [store_path(sf_dir, name) for name, _, _ in parts]
-    if not all(_committed(p) for p in paths):
-        if _ON_BUILD is not None:
-            _ON_BUILD(sf_dir, [name for name, _, _ in parts])
-        _gc_stale_fingerprints(sf_dir, fp)
-        _claim_fingerprint(sf_dir, fp)
-        frames = build()
-        if isinstance(frames, DataFrame):
-            frames = (frames,)
-        assert len(frames) == len(parts)
-        for frame, (name, pby, sby), path in zip(frames, parts, paths):
-            write_store(frame, path, pby, sby)
-    loaded = tuple(
-        spark.read.parquet(p).localCheckpoint() for p in paths
-    )
-    cache[key] = loaded
-    return loaded
+    def load() -> tuple[DataFrame, ...]:
+        paths = [store_path(sf_dir, name) for name in names]
+        if not all(_committed(p) for p in paths):
+            if _ON_BUILD is not None:
+                _ON_BUILD(sf_dir, names)
+            fp = corpus_fingerprint(sf_dir)
+            _gc_stale_fingerprints(sf_dir, fp)
+            _claim_fingerprint(sf_dir, fp)
+            frames = build()
+            if isinstance(frames, DataFrame):
+                frames = (frames,)
+            assert len(frames) == len(parts)
+            for frame, (_, pby, sby), path in zip(frames, parts, paths):
+                write_store(frame, path, pby, sby)
+        return tuple(spark.read.parquet(p).localCheckpoint() for p in paths)
+
+    return artifact(spark, sf_dir, "+".join(names), load)
 
 
 def durable_frame(
-    cache: dict,
     spark: SparkSession,
     sf_dir: str,
     name: str,
@@ -221,5 +246,5 @@ def durable_frame(
 ) -> DataFrame:
     """Single-frame convenience over durable_frames."""
     return durable_frames(
-        cache, spark, sf_dir, ((name, partition_by, sort_by),), build
+        spark, sf_dir, ((name, partition_by, sort_by),), build
     )[0]

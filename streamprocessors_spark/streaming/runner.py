@@ -32,23 +32,30 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from streamprocessors_spark.storage import artifact
 
 #: one streaming shuffle partition per this many input bytes (matches the
 #: spirit of spark.sql.adaptive.advisoryPartitionSizeInBytes for batch)
 _STREAM_TARGET_BYTES = 64 << 20
 
-#: schema probes are metadata (footer read + file listing) — memoized per
-#: (application, path) so each stream_* call stops paying a ~0.1 s batch
-#: read just to learn an unchanged fixture schema
-_SCHEMA_CACHE: dict = {}
 
-#: input-size suggestions accumulated by the stream source builders; the
-#: next run_available_now[_many]/engine start consumes them (max wins —
-#: a two-source query sizes for its larger input)
-_PENDING_PARTS: list = []
+class _Pending(threading.local):
+    """Input-size suggestions accumulated by the stream source builders
+    of THIS thread; the thread's next run_available_now[_many]/engine
+    start consumes them (max wins — a two-source query sizes for its
+    larger input). Per thread, so a source built on one thread never
+    sizes a stream started on another."""
+
+    def __init__(self):
+        self.parts: list[int] = []
+
+
+_PENDING = _Pending()
 
 
 def _input_bytes(path: str) -> int:
@@ -80,7 +87,7 @@ def _suggest_partitions(spark: SparkSession, path: str) -> None:
     except Exception:
         ceiling = 200
     p = max(2, -(-n_bytes // _STREAM_TARGET_BYTES))
-    _PENDING_PARTS.append(min(p, ceiling))
+    _PENDING.parts.append(min(p, ceiling))
 
 
 def _resolve_stream_partitions(
@@ -88,8 +95,8 @@ def _resolve_stream_partitions(
 ) -> int | None:
     """Explicit caller value > pending input-size suggestion > None
     (keep the session conf)."""
-    pending = max(_PENDING_PARTS) if _PENDING_PARTS else None
-    _PENDING_PARTS.clear()
+    pending = max(_PENDING.parts) if _PENDING.parts else None
+    _PENDING.parts.clear()
     if shuffle_partitions is not None:
         return int(shuffle_partitions)
     return pending
@@ -197,14 +204,19 @@ def _stage_dir(path: str) -> str:
 
 
 def _cached_schema(spark: SparkSession, path: str):
-    """Batch-probe a fixture file's schema once per (application, path) —
-    pure metadata, never rows; the probe honors whatever reader confs
-    (nanosAsLong) the caller set, which are identical for every probe of
-    the same path in one app."""
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+    """Batch-probe a fixture file's schema once per (session, corpus
+    content): pure metadata (footer read + file listing), never rows, so
+    each stream_* call stops paying a ~0.1 s batch read to learn an
+    unchanged schema. Keyed by the file's directory, whose fingerprint
+    covers the file. The probe honors whatever reader confs (nanosAsLong)
+    the caller set, which are identical for every probe of the same path
+    in one app."""
+    return artifact(
+        spark,
+        os.path.dirname(path),
+        f"schema:{os.path.basename(path)}",
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def _spread_small_input(

@@ -325,35 +325,78 @@ def test_html_extraction_recovers_text_property(spark):
     check()
 
 
-def test_bpe_trained_cache_is_per_corpus(spark):
-    """The memoized merge table must be keyed by corpus dir: serving for
-    sf0.001 after training on sf0.01 must NOT reuse sf0.01's merges."""
-    from streamprocessors_spark.plans.llm_ops import (
-        _BPE_TRAINED_CACHE,
-        _bpe_train,
-        _bpe_trained,
-    )
+def test_bpe_trained_cache_is_per_corpus(spark, sf_dir, tmp_path):
+    """The memoized merge table must be keyed by corpus: serving a second
+    corpus must NOT reuse the first one's merges, a repeat call must hit
+    the memo, and both must equal an honest retrain. A session that ran
+    the training path serves its merges without training again."""
+    import os
 
-    _BPE_TRAINED_CACHE.clear()
-    m_small, _ = _bpe_trained(spark, "/root/testdata/sf0.001")
-    assert "/root/testdata/sf0.001" in _BPE_TRAINED_CACHE
-    assert "/root/testdata/sf0.01" not in _BPE_TRAINED_CACHE
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streamprocessors_spark.plans.llm_ops import _bpe_train, _bpe_trained
+    from streamprocessors_spark.storage import artifact
+
+    builds = []
+
+    def counting_build():
+        builds.append(1)
+        return []
+
+    m_small, _ = _bpe_trained(spark, sf_dir)
+    assert artifact(spark, sf_dir, "bpe_merges", counting_build) is m_small
     # trained path returns exactly what an honest retrain returns
-    m_again, _ = _bpe_trained(spark, "/root/testdata/sf0.001")
+    m_again, _ = _bpe_trained(spark, sf_dir)
     assert m_again == m_small
-    m_fresh, _ = _bpe_train(spark, "/root/testdata/sf0.001")
+    m_fresh, _ = _bpe_train(spark, sf_dir)
     assert m_fresh == m_small
 
+    # a second corpus (the even docs only: same words, other counts)
+    other = tmp_path / "even"
+    other.mkdir()
+    t = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    even = pa.array([d % 2 == 0 for d in t["doc_id"].to_pylist()])
+    pq.write_table(t.filter(even), str(other / "documents.parquet"))
+    m_other_fresh, _ = _bpe_train(spark, str(other))
+    assert m_other_fresh != m_small
+    # the training run seeded the serving entry: no second training
+    assert artifact(spark, str(other), "bpe_merges", counting_build) == m_other_fresh
+    assert _bpe_trained(spark, str(other))[0] == m_other_fresh
+    assert _bpe_trained(spark, sf_dir)[0] == m_small
+    assert builds == []
 
-def test_store_caches_evict_stale_app_entries():
-    """Per-corpus store caches are (applicationId, sf_dir)-keyed; entries
-    from a stopped session are dead checkpoint references and must be
-    dropped on the next insert-path call (ADVICE r10)."""
-    from streamprocessors_spark.plans.llm_ops import evict_stale_app_entries
 
-    cache = {("app-old", "/sf/a"): 1, ("app-old", "/sf/b"): 2,
-             ("app-new", "/sf/a"): 3}
-    evict_stale_app_entries(cache, "app-new")
-    assert cache == {("app-new", "/sf/a"): 3}
-    evict_stale_app_entries(cache, "app-new")  # idempotent
-    assert cache == {("app-new", "/sf/a"): 3}
+def test_store_caches_evict_stale_app_entries(monkeypatch):
+    """Artifacts are (applicationId, corpus, name)-keyed; entries from a
+    stopped session are dead checkpoint references and every call drops
+    them from the whole memo, whatever their name (ADVICE r10)."""
+    from types import SimpleNamespace
+
+    from streamprocessors_spark import storage
+
+    # an empty memo, so the live test session's artifacts survive
+    monkeypatch.setattr(storage, "_ARTIFACTS", {})
+    builds = []
+
+    def build(tag):
+        def run():
+            builds.append(tag)
+            return tag
+
+        return run
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    old, new = session("app-old"), session("app-new")
+    assert storage.artifact(old, "/sf/a", "m", build("old-a")) == "old-a"
+    assert storage.artifact(old, "/sf/b", "n", build("old-b")) == "old-b"
+    assert storage.artifact(old, "/sf/b", "n", build("old-b2")) == "old-b"
+    # a new session builds its own entry and evicts the old session's
+    assert storage.artifact(new, "/sf/a", "m", build("new-a")) == "new-a"
+    assert storage.artifact(new, "/sf/a", "m", build("new-a2")) == "new-a"  # idempotent
+    assert builds == ["old-a", "old-b", "new-a"]
+    # the old session's entry under ANOTHER name is gone too
+    assert storage.artifact(old, "/sf/b", "n", build("old-b3")) == "old-b3"
+    assert builds[-1] == "old-b3"

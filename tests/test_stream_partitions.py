@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
 from pyspark.sql import functions as F
 
@@ -19,13 +20,13 @@ from streamprocessors_spark.streaming import runner as R
 
 def test_resolution_precedence(spark):
     # pending suggestion alone
-    R._PENDING_PARTS.clear()
-    R._PENDING_PARTS.append(3)
+    R._PENDING.parts.clear()
+    R._PENDING.parts.append(3)
     assert R._resolve_stream_partitions(spark, None) == 3
-    assert R._PENDING_PARTS == []  # consumed
+    assert R._PENDING.parts == []  # consumed
 
     # explicit caller value beats pending
-    R._PENDING_PARTS.append(3)
+    R._PENDING.parts.append(3)
     assert R._resolve_stream_partitions(spark, 7) == 7
 
     # nothing pending, nothing passed -> keep session conf (None)
@@ -33,11 +34,11 @@ def test_resolution_precedence(spark):
 
 
 def test_suggestion_scales_with_bytes_and_clamps(spark, sf_dir):
-    R._PENDING_PARTS.clear()
+    R._PENDING.parts.clear()
     path = os.path.join(sf_dir, "documents.parquet")
     R._suggest_partitions(spark, path)
     ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    got = R._PENDING_PARTS.pop()
+    got = R._PENDING.parts.pop()
     n_bytes = os.path.getsize(path)
     expect = max(2, -(-n_bytes // R._STREAM_TARGET_BYTES))
     assert got == min(expect, ceiling)
@@ -65,13 +66,45 @@ def test_conf_latched_and_restored(spark, sf_dir):
 
 
 def test_schema_probe_memoized(spark, sf_dir):
+    from streamprocessors_spark.storage import artifact
+
     path = os.path.join(sf_dir, "documents.parquet")
     s1 = R._cached_schema(spark, path)
-    key = (spark.sparkContext.applicationId, path)
-    assert key in R._SCHEMA_CACHE
+    # memoized under the file's directory: a build under that key never runs
+    calls = []
+    probe = artifact(
+        spark, sf_dir, "schema:documents.parquet", lambda: calls.append(1)
+    )
+    assert probe is s1 and calls == []
     # same object back on the second call (no re-read)
     assert R._cached_schema(spark, path) is s1
     assert s1 == spark.read.parquet(path).schema
+
+
+def test_pending_suggestion_stays_on_its_thread(spark, tmp_path):
+    """A source built on one thread must not size a stream started on
+    another: the suggestion is consumed only by its own thread."""
+    big = tmp_path / "big.parquet"
+    with open(big, "wb") as fh:
+        fh.truncate(200 << 20)  # sparse: 200 MB of size, no disk blocks
+    R._resolve_stream_partitions(spark, None)  # drain this thread's list
+    built, main_done, seen = threading.Event(), threading.Event(), []
+
+    def build_then_start():
+        R._suggest_partitions(spark, str(big))
+        built.set()
+        main_done.wait(30)
+        seen.append(R._resolve_stream_partitions(spark, None))
+
+    worker = threading.Thread(target=build_then_start)
+    worker.start()
+    assert built.wait(30)
+    main_got = R._resolve_stream_partitions(spark, None)
+    main_done.set()
+    worker.join()
+    assert main_got is None
+    # the worker's own start still gets its suggestion
+    assert seen and seen[0] is not None and seen[0] >= 2
 
 
 def test_explicit_partitions_reach_the_stream(spark, sf_dir):
@@ -111,11 +144,11 @@ def test_directory_input_sized_by_its_part_files(spark, sf_dir, tmp_path, monkey
     # one partition per fifth of the input -> 5 or 6 suggested, under the
     # test session's ceiling of 8
     monkeypatch.setattr(R, "_STREAM_TARGET_BYTES", n_bytes // 5)
-    R._PENDING_PARTS.clear()
+    R._PENDING.parts.clear()
     stream = R.stream_documents(spark, str(tmp_path))
     ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
     expect = min(max(2, -(-n_bytes // R._STREAM_TARGET_BYTES)), ceiling)
-    assert R._PENDING_PARTS == [expect]
+    assert R._PENDING.parts == [expect]
     assert expect in (5, 6)
 
     sink = R.run_available_now(stream.select("doc_id"))
