@@ -5,16 +5,18 @@ model and verdict frames, probe memos, streaming schema probes, and the
 durable parquet stores) is memoized here and nowhere else, through
 ``artifact(spark, sf_dir, name, build)``:
 
-- Key: (applicationId, ``corpus_fingerprint(sf_dir)``, name). The
-  fingerprint covers the corpus files (path + per-table size +
-  mtime_ns), so a corpus regenerated at the same path misses and
+- Key: (applicationId, corpus path, ``corpus_fingerprint(sf_dir)``,
+  name). The fingerprint covers the corpus files (path + per-table size
+  + mtime_ns), so a corpus regenerated at the same path misses and
   rebuilds instead of serving the old models and frames. The
   applicationId scopes an entry to the session that built it: its
   localCheckpoint-pinned frames are dead references once that session
   stops, so every artifact is built once per (session, corpus content).
 - Eviction: every call drops the entries of every other application from
-  the whole memo (one live session per process), so a long-lived process
-  that cycles sessions does not grow it without bound.
+  the whole memo (one live session per process), and the entries of the
+  same corpus path under an earlier fingerprint, so a long-lived process
+  that cycles sessions or regenerates a corpus does not grow it without
+  bound.
 
 Durable stores (the MinHash band store with per-bucket sizes, the v0
 and full-corpus keep-list labels, the verified text/image pair tables,
@@ -170,7 +172,31 @@ def write_store(
             os.rename(tmp, path)
 
 
-# (applicationId, corpus fingerprint, artifact name) -> artifact
+def replace_dir(df: DataFrame, dest: str) -> None:
+    """Replace the parquet directory ``dest`` with ``df``, for stores that
+    are rewritten rather than written once. ``df`` is staged to a sibling
+    ``_tmp_<name>`` (invisible to Spark's reader, which skips underscore
+    paths) and renamed in: one atomic rename when ``dest`` is absent,
+    otherwise a swap through ``_old_<name>``. Both names are cleared
+    before use, so a crashed attempt's leftovers never accumulate. The
+    swap has a window where ``dest`` does not exist; a store read while
+    it may be rewritten serializes its readers with this call."""
+    parent, name = os.path.split(os.path.normpath(dest))
+    tmp = os.path.join(parent, f"_tmp_{name}")
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.write.mode("overwrite").parquet(tmp)
+    if not os.path.exists(dest):
+        os.rename(tmp, dest)
+        return
+    old = os.path.join(parent, f"_old_{name}")
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(dest, old)
+    os.rename(tmp, dest)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+# (applicationId, corpus abspath, corpus fingerprint, artifact name)
+# -> artifact
 _ARTIFACTS: dict = {}
 
 
@@ -179,11 +205,15 @@ def artifact(spark: SparkSession, sf_dir: str, name: str, build):
     on the first call per (session, corpus content) and every later call
     returns the same object. ``build`` must localCheckpoint a frame that
     needs executor pinning. Two threads racing on a first call may both
-    build; the first result stored is the one both get."""
+    build; the first result stored is the one both get. Every call drops
+    the entries of other sessions and of the same corpus path's earlier
+    fingerprints (a corpus regenerated in place)."""
     app = spark.sparkContext.applicationId
-    for k in [k for k in list(_ARTIFACTS) if k[0] != app]:
-        _ARTIFACTS.pop(k, None)
-    key = (app, corpus_fingerprint(sf_dir), name)
+    src, fp = os.path.abspath(sf_dir), corpus_fingerprint(sf_dir)
+    for k in list(_ARTIFACTS):
+        if k[0] != app or (k[1] == src and k[2] != fp):
+            _ARTIFACTS.pop(k, None)
+    key = (app, src, fp, name)
     if key in _ARTIFACTS:
         return _ARTIFACTS[key]
     return _ARTIFACTS.setdefault(key, build())

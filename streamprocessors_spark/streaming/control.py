@@ -8,9 +8,14 @@ dbdriver_apps_procs_docs.c:104-350). Spark-first restatement:
 - the settings stream is a DataFrame; both input formats are decoded
   JVM-side (``from_json`` / ``str_to_map``) behind one normalizer;
 - the store is a parquet-backed table upserted per micro-batch in
-  ``foreachBatch`` — last-writer-wins per sys_id, atomic swap via
-  write-to-temp + rename (Delta's MERGE is the managed-platform analog;
-  plain parquet keeps the container dependency-free);
+  ``foreachBatch`` — last-writer-wins per sys_id, rewritten by
+  ``storage.replace_dir``'s staged directory swap (Delta's MERGE is the
+  managed-platform analog; plain parquet keeps the container
+  dependency-free);
+- the store's own lock serializes every rewrite with the collected reads
+  (``rows()``), as the reference's API readers take the mutex its
+  register swap holds (psi_proc.c:371-390): a reader sees the old table
+  or the new one, never the swap's missing-directory window;
 - S5's read-back verification becomes a post-merge count/content assert.
 
 At scale the store is a dimension table (thousands of processors, not
@@ -22,12 +27,14 @@ stays untouched.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from streamprocessors_spark.storage import replace_dir
 
 # Reference settings keys (mpeg2_sp.c:111-132 + app_prog_proc.c:95-139).
 SETTINGS_FIELDS = [
@@ -70,12 +77,17 @@ class ConfigStore:
 
     upsert(): last-writer-wins merge of a batch of (sys_id, seq, doc)
     settings rows — the reference's replace-by-sys_id (S5) with ``seq``
-    as the writer-ordering tiebreak. Atomicity via temp-dir + rename.
+    as the writer-ordering tiebreak. ``upsert``, ``delete`` and ``rows``
+    run under ``lock``, so a concurrent reader never meets the rewrite's
+    directory swap; a caller holds ``lock`` (re-entrant) across a
+    read-modify-write such as minting the next ``seq``. ``read()`` is a
+    lazy scan for a store nobody is rewriting.
     """
 
     def __init__(self, spark: SparkSession, path: str | None = None) -> None:
         self.spark = spark
         self.path = path or tempfile.mkdtemp(prefix="spgraft_config_")
+        self.lock = threading.RLock()
 
     def read(self) -> DataFrame:
         if not any(f.endswith(".parquet") for f in os.listdir(self.path)):
@@ -84,32 +96,42 @@ class ConfigStore:
             )
         return self.spark.read.parquet(self.path)
 
+    def rows(self) -> dict[int, tuple[int, str]]:
+        """``{sys_id: (seq, doc)}`` of the whole store."""
+        with self.lock:
+            return {
+                int(r.sys_id): (int(r.seq), r.doc)
+                # bounded: one row per configured system
+                for r in self.read().collect()
+            }
+
     def upsert(self, batch: DataFrame) -> int:
         """Merge a settings batch; returns the post-merge row count (the
         reference's read-back verify, dbdriver_apps_procs_docs.c:265-350)."""
-        current = self.read()
-        merged = (
-            current.unionByName(batch.select("sys_id", "seq", "doc"))
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("sys_id").orderBy(F.col("seq").desc())
-                ),
+        with self.lock:
+            merged = (
+                self.read()
+                .unionByName(batch.select("sys_id", "seq", "doc"))
+                .withColumn(
+                    "rn",
+                    F.row_number().over(
+                        Window.partitionBy("sys_id").orderBy(F.col("seq").desc())
+                    ),
+                )
+                .where("rn = 1")
+                .drop("rn")
             )
-            .where("rn = 1")
-            .drop("rn")
-        )
-        tmp = self.path + ".tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = self.path
-        swap = self.path + ".old"
-        if os.path.exists(swap):
-            shutil.rmtree(swap)
-        os.rename(old, swap)
-        os.rename(tmp, old)
-        shutil.rmtree(swap)
-        n = self.read().count()
-        return n
+            replace_dir(merged.coalesce(1), self.path)
+            return self.read().count()
+
+    def delete(self, sys_id: int) -> bool:
+        """Remove ``sys_id``'s settings; False when it was not stored."""
+        with self.lock:
+            if sys_id not in self.rows():
+                return False
+            remaining = self.read().where(F.col("sys_id") != sys_id)
+            replace_dir(remaining.coalesce(1), self.path)
+            return True
 
     def foreach_batch(self):
         """Sink function for ``writeStream.foreachBatch`` (S5 per-epoch
@@ -169,14 +191,11 @@ class InputSupervisor:
         self.generation = 0
 
     def desired_url(self) -> str | None:
-        rows = (
-            normalize_settings(
-                self.store.read().where(F.col("sys_id") == self.sys_id)
-            )
-            .select("input_url")
-            .collect()  # bounded: one config row per sys_id
-        )
-        return rows[0].input_url if rows else None
+        stored = self.store.rows().get(self.sys_id)
+        if stored is None:
+            return None
+        doc = self.store.spark.createDataFrame([(stored[1],)], "doc STRING")
+        return normalize_settings(doc).first().input_url
 
     def reconcile(self):
         """Make the running query match the stored input_url; returns the

@@ -37,6 +37,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from streamprocessors_spark.storage import replace_dir
+
 _BATCH_DIR_RE = re.compile(r"^batch_id=(\d+)$")
 _STATE_FILE_RE = re.compile(r"^state_(\d+)\.json$")
 
@@ -45,29 +47,17 @@ def write_batch_output(df: DataFrame, sink: str, batch_id: int) -> None:
     """Idempotent per-batch parquet write: a replayed batch replaces
     its own directory, so retries never duplicate output.
 
-    Atomic-visible: the batch is written to a ``_tmp_batch_id=N``
-    staging dir (invisible to read_sink's ``batch_id=N`` listing and to
-    Spark's reader, which skips underscore paths) and RENAMED into
-    place. A first-attempt commit is therefore a single atomic rename —
-    a concurrent drain never observes a half-written or vanished
-    directory, which mode=overwrite straight into ``batch_id=N`` did
-    (it deletes the dir for the whole duration of the rewrite). Only a
-    replay of an already-committed batch (crash recovery, when no live
-    reader runs by definition) briefly swaps the old dir out."""
-    import shutil
-
-    dest = os.path.join(sink, f"batch_id={batch_id}")
-    tmp = os.path.join(sink, f"_tmp_batch_id={batch_id}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(dest):
-        old = os.path.join(sink, f"_old_batch_id={batch_id}")
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(dest, old)
-        os.rename(tmp, dest)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(tmp, dest)
+    Atomic-visible through ``storage.replace_dir``: the batch is staged
+    in ``_tmp_batch_id=N`` (invisible to read_sink's ``batch_id=N``
+    listing and to Spark's reader, which skips underscore paths) and
+    renamed into place. A first-attempt commit is therefore a single
+    atomic rename — a concurrent drain never observes a half-written or
+    vanished directory, which mode=overwrite straight into
+    ``batch_id=N`` did (it deletes the dir for the whole duration of the
+    rewrite). Only a replay of an already-committed batch (crash
+    recovery, when no live reader runs by definition) briefly swaps the
+    old dir out through ``_old_batch_id=N``."""
+    replace_dir(df, os.path.join(sink, f"batch_id={batch_id}"))
 
 
 def read_sink(spark: SparkSession, sink: str, schema: str) -> DataFrame:

@@ -11,10 +11,14 @@ This module is the same surface over Spark state: a threaded stdlib HTTP
 server whose data suppliers are plain callables returning the JSON
 ``data`` payload — in practice the collected output of the registered
 envelope queries (``ts_programs_summary_json``, ``stats_endpoint_json``)
-or a ConfigStore read. The server owns NO Spark objects and never blocks
-a streaming query: suppliers run on the request thread against whatever
-snapshot the engine last materialized, exactly like the reference's
-handler reading the PSI registers built by the processing threads.
+or a ConfigStore read. Stats suppliers touch no Spark object: they run on
+the request thread against whatever snapshot the engine last
+materialized, like the reference's handler reading the PSI registers
+built by the processing threads. The config routes do run Spark: they
+read and rewrite the ConfigStore under its lock, so a GET that meets a
+PUT's or DELETE's directory swap waits for it and then reads the new
+table, as the reference's API readers take the mutex its register swap
+holds (psi_proc.c:371-390).
 
 Status translation (stream_procs_api_http.c:236-274):
 
@@ -182,70 +186,11 @@ def config_store_routes(server: StateRestServer, store) -> None:
     """Wire the reference's /procs surface onto a ConfigStore: GET lists
     or fetches settings docs by sys_id, PUT upserts a settings doc (the
     body or query string, dual-format per P9), DELETE removes. Mirrors
-    the proc-by-id routing of stream_procs_api_http.c:134-231."""
-    from pyspark.sql import functions as F
-
-    # ThreadingHTTPServer serves concurrently; all mutations (the
-    # seq read-modify-write AND the tmp/old rename swap) serialize behind
-    # one per-store lock — two concurrent PUTs would otherwise mint the
-    # same seq, and two swaps would collide on the shared .tmp/.old paths.
-    mutate_lock = threading.Lock()
-
-    def _rows() -> dict[int, tuple[int, str]]:
-        # Readers run unlocked: the swap has a window where store.path
-        # does not exist (rename-out before rename-in), so a transient
-        # MISSING-PATH failure is retried, not reported as an empty
-        # store/404. Only that failure class retries — a persistent
-        # reader error (schema corruption, permissions) surfaces
-        # immediately instead of blocking ~1 s behind 20 futile sleeps.
-        import time as _time
-
-        for attempt in range(20):
-            try:
-                return {
-                    int(r.sys_id): (int(r.seq), r.doc)
-                    # bounded: one row per configured system (config store)
-                    for r in store.read().collect()
-                }
-            except Exception as e:  # noqa: BLE001 — classify below
-                # Primary classification is STRUCTURAL — the Spark error
-                # condition name (getCondition/getErrorClass) and the
-                # underlying py4j Java exception class — because message
-                # text is brittle across Spark versions/locales. The
-                # substring list stays as a last-resort fallback only.
-                cond = ""
-                for attr in ("getCondition", "getErrorClass"):
-                    getter = getattr(e, attr, None)
-                    if callable(getter):
-                        try:
-                            cond = getter() or ""
-                        except Exception:  # noqa: BLE001
-                            cond = ""
-                        if cond:
-                            break
-                java_cls = ""
-                je = getattr(e, "java_exception", None)
-                if je is not None:
-                    try:
-                        java_cls = je.getClass().getName()
-                    except Exception:  # noqa: BLE001
-                        java_cls = ""
-                msg = f"{type(e).__name__}: {e}"
-                missing = (
-                    isinstance(e, FileNotFoundError)
-                    or "PATH_NOT_FOUND" in cond
-                    or "FileNotFoundException" in java_cls
-                    or "PATH_NOT_FOUND" in msg
-                    or "Path does not exist" in msg
-                    or "FileNotFoundException" in msg
-                )
-                if not missing or attempt == 19:
-                    raise
-                _time.sleep(0.05)
-        raise AssertionError("unreachable")
+    the proc-by-id routing of stream_procs_api_http.c:134-231. Every
+    handler goes through the store's locked methods."""
 
     def get(obj_id: str | None, query: str, body: str) -> tuple[str, str | None]:
-        rows = _rows()
+        rows = store.rows()
         if obj_id is None:
             data = json.dumps(
                 [
@@ -263,27 +208,25 @@ def config_store_routes(server: StateRestServer, store) -> None:
     def put(obj_id: str | None, query: str, body: str) -> tuple[str, str | None]:
         if obj_id is None:
             return NOT_FOUND, None
-        doc = body or query
-        with mutate_lock:
-            rows = _rows()
-            seq = rows.get(int(obj_id), (0, ""))[0] + 1
+        k = int(obj_id)
+        # ThreadingHTTPServer serves concurrently: holding the store lock
+        # across the seq read and the upsert keeps two concurrent PUTs
+        # from minting the same seq.
+        with store.lock:
+            seq = store.rows().get(k, (0, ""))[0] + 1
             batch = store.spark.createDataFrame(
-                [(int(obj_id), seq, doc)],
+                [(k, seq, body or query)],
                 "sys_id BIGINT, seq BIGINT, doc STRING",
             )
             store.upsert(batch)
-        return OK, json.dumps({"sys_id": int(obj_id), "seq": seq})
+        return OK, json.dumps({"sys_id": k, "seq": seq})
 
     def delete(obj_id: str | None, query: str, body: str) -> tuple[str, str | None]:
         if obj_id is None:
             return NOT_FOUND, None
         k = int(obj_id)
-        with mutate_lock:
-            if k not in _rows():
-                return NOT_FOUND, None
-            remaining = store.read().where(F.col("sys_id") != k)
-            # rewrite-without: same atomic tmp-dir + rename swap as upsert
-            _replace(store, remaining)
+        if not store.delete(k):
+            return NOT_FOUND, None
         return OK, json.dumps({"deleted": k})
 
     server.route("GET", "procs", get)
@@ -293,20 +236,6 @@ def config_store_routes(server: StateRestServer, store) -> None:
     server.route("GET", "stream_procs", get)
     server.route("PUT", "stream_procs", put)
     server.route("DELETE", "stream_procs", delete)
-
-
-def _replace(store, df) -> None:
-    import os
-    import shutil
-
-    tmp = store.path + ".tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swap = store.path + ".old"
-    if os.path.exists(swap):
-        shutil.rmtree(swap)
-    os.rename(store.path, swap)
-    os.rename(tmp, store.path)
-    shutil.rmtree(swap)
 
 
 class MonitorStats:

@@ -244,14 +244,12 @@ LSH_PAIR_SCHEMA = StructType(
 # instead of one each — the identical per-bucket state machine, with the
 # per-group overhead amortized B-fold (the gram_repeat_positions_stream
 # precedent: ~20k distinct (band, bh) buckets at sf0.1 cost ~2 s of pure
-# per-group overhead when each was its own group). B is the state-shard
-# knob: a 100 TB run raises it so per-shard state stays KB-sized.
+# per-group overhead when each was its own group). B is fixed here; a
+# 100 TB run would raise it so per-shard state stays KB-sized.
 LSH_STATE_BUCKETS = 1024
 
 
-def lsh_bucket_pairs_stream(
-    bands: DataFrame, max_bucket: int, n_shards: int = LSH_STATE_BUCKETS
-) -> DataFrame:
+def lsh_bucket_pairs_stream(bands: DataFrame, max_bucket: int) -> DataFrame:
     """Keyed-state LSH candidate generation over a (doc_id, band, bh)
     stream: each (band, bh) bucket's membership lives in the state store,
     and a micro-batch emits only the pairs its NEW documents form against
@@ -310,7 +308,7 @@ def lsh_bucket_pairs_stream(
             held[bk] = (members, n)
         return held, rows
 
-    shard = F.pmod(F.xxhash64("band", "bh"), F.lit(n_shards)).cast("int")
+    shard = F.pmod(F.xxhash64("band", "bh"), F.lit(LSH_STATE_BUCKETS)).cast("int")
     return _sharded(bands, shard, step, LSH_PAIR_SCHEMA)
 
 
@@ -328,8 +326,8 @@ def lsh_bucket_pairs_stream(
 # Bucketing to pmod(gh, B) keeps the identical per-gram state machine
 # (all occurrences of a gram still meet in one group) while amortizing
 # the overhead B-fold; the per-bucket dict rides in one BinaryType state
-# row. B scales with the corpus (a 100 TB run raises it so per-bucket
-# state stays KB-sized — same knob as state-store shard count).
+# row. B is fixed here; a 100 TB run would raise it so per-bucket state
+# stays KB-sized, as it would the LSH twin's LSH_STATE_BUCKETS.
 # ---------------------------------------------------------------------------
 
 GRAM_POS_SCHEMA = StructType(
@@ -344,9 +342,7 @@ GRAM_POS_SCHEMA = StructType(
 GRAM_STATE_BUCKETS = 1024
 
 
-def gram_repeat_positions_stream(
-    grams: DataFrame, n_buckets: int = GRAM_STATE_BUCKETS
-) -> DataFrame:
+def gram_repeat_positions_stream(grams: DataFrame) -> DataFrame:
     """(doc_id, pos) of every gram position whose gram occurs >= 2 times
     across the whole stream, emitted incrementally: the first occurrence
     is held in state and released when the second arrives; third and
@@ -380,7 +376,7 @@ def gram_repeat_positions_stream(
                     held[g] = (fd, fp, n)
         return held, out
 
-    shard = F.pmod(F.col("gh"), F.lit(n_buckets)).cast("int")
+    shard = F.pmod(F.col("gh"), F.lit(GRAM_STATE_BUCKETS)).cast("int")
     return _sharded(grams, shard, step, GRAM_POS_SCHEMA)
 
 

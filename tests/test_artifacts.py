@@ -69,6 +69,31 @@ def test_regenerated_corpus_gets_fresh_artifacts(spark, sf_dir, tmp_path):
     assert _nb_view(_nb_trained(spark, corpus)) == nb_fresh
 
 
+def test_regenerated_corpus_evicts_its_stale_artifacts(sf_dir, tmp_path, monkeypatch):
+    """Rebuilding after a corpus is rewritten in place leaves one memo
+    entry under the artifact's name: the earlier fingerprint's entry (a
+    pinned frame, for some artifacts) is dropped, not kept until the
+    session stops."""
+    from types import SimpleNamespace
+
+    from streamprocessors_spark import storage
+
+    # an empty memo, so the live test session's artifacts survive
+    monkeypatch.setattr(storage, "_ARTIFACTS", {})
+    session = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    corpus = _copy_corpus(sf_dir, str(tmp_path / "corpus"))
+    other = _copy_corpus(sf_dir, str(tmp_path / "other"))
+    assert storage.artifact(session, corpus, "model", lambda: "v1") == "v1"
+    assert storage.artifact(session, other, "probe", lambda: "o1") == "o1"
+
+    _drop_every_third_doc(corpus)
+    assert storage.artifact(session, corpus, "model", lambda: "v2") == "v2"
+    held = [v for k, v in storage._ARTIFACTS.items() if k[-1] == "model"]
+    assert held == ["v2"]
+    # another corpus's entries are not stale fingerprints of this one
+    assert storage.artifact(session, other, "probe", lambda: "o2") == "o1"
+
+
 #: module-level empty containers that are not memos: the query registry,
 #: the ES-processor registry, and the artifact memo itself
 _ALLOWED_MODULE_CONTAINERS = {
@@ -125,4 +150,24 @@ def test_no_module_level_memo_containers():
                 name = ast.unparse(t)
                 if (rel, name) not in _ALLOWED_MODULE_CONTAINERS:
                     found.append(f"{rel}:{node.lineno} {name}")
+    assert found == [], found
+
+
+def test_directory_swaps_live_in_storage():
+    """Rewriting a parquet directory is storage.replace_dir's (or
+    write_store's) job; an os.rename anywhere else is a second copy of
+    the swap beside it."""
+    pkg = os.path.join(REPO_ROOT, "streamprocessors_spark")
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+        if rel == "storage.py":
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        found += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and ast.unparse(node.func) == "os.rename"
+        ]
     assert found == [], found

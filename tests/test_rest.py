@@ -79,8 +79,11 @@ def test_stats_needle_routing():
 
 
 def _get(url):
-    with urllib.request.urlopen(url) as r:
-        return r.status, json.loads(r.read())
+    try:
+        with urllib.request.urlopen(url) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
 
 
 def _send(method, url, body=b""):
@@ -353,6 +356,51 @@ def test_concurrent_puts_and_gets_are_serialized(spark, tmp_path):
         code, env = _get(f"{base}/procs/1")
         assert env["data"]["seq"] == 7
     finally:
+        server.close()
+
+
+def test_get_waits_for_a_held_store_swap(spark, tmp_path, monkeypatch):
+    """A GET arriving while a PUT's directory swap has the store renamed
+    out must wait for the swap and read the new table, never answer 404:
+    the swap is held open for ~3 s, longer than any retry budget."""
+    import os
+    import threading as _th
+
+    from streamprocessors_spark.streaming import control
+
+    cfg = str(tmp_path / "cfg")
+    server = StateRestServer()
+    store = control.ConfigStore(spark, path=cfg)
+    (tmp_path / "cfg").mkdir()
+    config_store_routes(server, store)
+    port = server.start()
+    base = f"http://127.0.0.1:{port}"
+    try:
+        assert _send("PUT", f"{base}/procs/1?cbr=1")[0] == 200
+
+        swapped_out, release = _th.Event(), _th.Event()
+        real_rename = control.os.rename
+
+        def held_rename(src, dst):
+            real_rename(src, dst)
+            if os.path.abspath(src) == cfg:  # the live store just left
+                swapped_out.set()
+                release.wait(3)
+
+        monkeypatch.setattr(control.os, "rename", held_rename)
+        put = _th.Thread(target=_send, args=("PUT", f"{base}/procs/1?cbr=2"))
+        put.start()
+        assert swapped_out.wait(120), "the PUT never swapped the store"
+        got = []
+        reader = _th.Thread(target=lambda: got.append(_get(f"{base}/procs/1")))
+        reader.start()
+        reader.join(120)
+        put.join(120)
+        code, env = got[0]
+        assert code == 200, env
+        assert env["data"]["seq"] == 2
+    finally:
+        release.set()
         server.close()
 
 
